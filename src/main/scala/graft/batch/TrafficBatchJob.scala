@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.City
 import graft.schemas.Schemas
+import graft.sources.LocalFs
 
 /** The reference's batch analytics job, re-expressed Spark-first
   * (traffic_batch_processing.py — SURVEY §3.1). Differences, by design:
@@ -69,6 +70,7 @@ object TrafficBatchJob {
           jdbcUrl: Option[String] = None,
           jdbcProps: Map[String, String] = Map.empty,
           inferSchema: Boolean = false): DataFrame = {
+    LocalFs.bind(spark)
     // NB: the reference reads its JSONL lake with multiline=true
     // (traffic_batch_processing.py:40-42), which makes Spark parse each
     // FILE as a single JSON document — only the first record per file

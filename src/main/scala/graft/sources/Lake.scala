@@ -42,14 +42,17 @@ object Lake {
   /** Write a bronze partition tree. `format` "json" mirrors the
     * reference's JSONL lake; "parquet" is the scale-path default. */
   def writeBronze(df: DataFrame, path: String, format: String = "json",
-                  fallback: Column = current_timestamp()): Unit =
+                  fallback: Column = current_timestamp()): Unit = {
+    LocalFs.bind(df.sparkSession)
     withPartitionKeys(df, fallback).write.mode("append")
       .partitionBy("year", "month", "day", "hour").format(format).save(path)
+  }
 
   /** Read a bronze tree back with its declared schema; partition columns
     * come from the directory layout (pruning on them is free). */
   def readBronze(spark: SparkSession, path: String, schema: StructType,
                  format: String = "json"): DataFrame = {
+    LocalFs.bind(spark)
     val partitioned = new StructType(
       (schema.fields ++ new StructType()
         .add("year", "string").add("month", "string")
@@ -395,6 +398,7 @@ object Lake {
     * table + MSCK REPAIR to discover partitions (S12). */
   def registerTable(spark: SparkSession, name: String, path: String,
                     schema: StructType, format: String = "json"): Unit = {
+    LocalFs.bind(spark)
     spark.sql(s"DROP TABLE IF EXISTS $name")
     spark.sql(
       s"""CREATE TABLE $name (${schema.toDDL},

@@ -61,6 +61,7 @@ object TopicStream {
   def readStream(spark: SparkSession, base: String, subscribe: Seq[String],
                  maxFilesPerTrigger: Option[Int] = None,
                  numPartitions: Int = DefaultNumPartitions): DataFrame = {
+    LocalFs.bind(spark)
     val reader = spark.readStream.format("text").schema(wireSchema)
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
     toWire(reader.load(base).where(col("topic").isin(subscribe: _*)), numPartitions)
@@ -69,9 +70,11 @@ object TopicStream {
   /** Batch read of the same tree (offline reprocessing over the "topic"
     * retention window). */
   def read(spark: SparkSession, base: String, subscribe: Seq[String],
-           numPartitions: Int = DefaultNumPartitions): DataFrame =
+           numPartitions: Int = DefaultNumPartitions): DataFrame = {
+    LocalFs.bind(spark)
     toWire(spark.read.format("text").schema(wireSchema).load(base)
       .where(col("topic").isin(subscribe: _*)), numPartitions)
+  }
 
   /** Batch "producer" (S6): append message values into topic dirs. The
     * reference producer's gzip/acks/retries are broker-side concerns;
@@ -80,18 +83,6 @@ object TopicStream {
                  valueCol: Column): Unit =
     df.select(valueCol.cast("string").as("value"), topicCol.as("topic"))
       .write.mode("append").partitionBy("topic").format("text").save(base)
-
-  /** Streaming producer (S6): route a stream's rows into topic dirs —
-    * projects to the text sink's (value, topic) shape like the batch
-    * [[writeTopic]], so a wire-shaped or arbitrary frame works as-is. */
-  def writeStreamTopic(df: DataFrame, base: String, checkpoint: String,
-                       topicCol: Column = col("topic"),
-                       valueCol: Column = col("value"),
-                       trigger: Trigger = Trigger.ProcessingTime("60 seconds")): StreamingQuery =
-    df.select(valueCol.cast("string").as("value"), topicCol.as("topic"))
-      .writeStream.format("text").partitionBy("topic")
-      .option("path", base).option("checkpointLocation", checkpoint)
-      .trigger(trigger).start()
 
   /** Multi-topic collector (S7, traffic_collector.py:27-32,94-105): one
     * stream subscribed to several topics, routed back apart by the

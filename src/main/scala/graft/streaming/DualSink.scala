@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import graft.sources.LocalFs
 
 /** S8/W9: one processed stream fanned to a warehouse table and a
   * partitioned lake — a single `foreachBatch` writing both (exactly
@@ -92,7 +93,8 @@ object DualSink {
     * batch) readable through a [[CollectorMetrics]] listener. */
   def start(tracked: Dataset[VisionOut], checkpoint: String,
             warehousePath: String, lakePath: String,
-            triggerMs: Long = 60000): StreamingQuery =
+            triggerMs: Long = 60000): StreamingQuery = {
+    LocalFs.bind(tracked.sparkSession)
     tracked.toDF()
       .observe(MetricsName, count(lit(1)).as("records"),
         coalesce(sum("total_objects"), lit(0L)).as("objects"))
@@ -102,4 +104,5 @@ object DualSink {
       .trigger(Trigger.ProcessingTime(triggerMs))
       .foreachBatch((b: DataFrame, id: Long) => writeBatch(b, id, warehousePath, lakePath))
       .start()
+  }
 }
