@@ -79,9 +79,9 @@ import java.util.concurrent.{Executors, TimeUnit, TimeoutException}
   * committed artifact): after the battery, every query whose
   * in-battery min exceeded SPARK_GRAFT_ISOLATED_MIN_SEC (default
   * 1.5 s, cap SPARK_GRAFT_ISOLATED_MAX=16) re-measures in a FRESH
-  * child JVM — one per query, parent session stopped first — under
-  * the ScratchTiming protocol (q04 warm-up, min-of-2 back-to-back,
-  * young heap, near-empty catalog). The JSON carries "isolated"
+  * child JVM — one per query, parent session stopped first — with a
+  * q04 warm-up, min-of-2 back-to-back, a young heap and a near-empty
+  * catalog. The JSON carries "isolated"
   * (per-query) and "isolated_total" (isolated where measured,
   * in-battery min elsewhere): a regression with a cause in the code
   * moves BOTH figures, neighborhood drift moves only the in-battery
@@ -92,10 +92,9 @@ object Bench {
 
   /** Child-JVM isolated measurement (see the isolated-figure note in
     * [[main]]): fresh session, q04 warm-up, min-of-2 back-to-back per
-    * name with the cache cleared between — the exact ScratchTiming
-    * protocol, now emitted by the harness itself so cross-round drift
-    * attribution ships in BENCH_r*.json instead of ad-hoc scratch
-    * runs. Prints one `ISOLATED <name> <sec>` line per query. */
+    * name with the cache cleared between, emitted by the harness
+    * itself so cross-round drift attribution ships in BENCH_r*.json
+    * instead of ad-hoc scratch runs. Prints one `ISOLATED <name> <sec>` line per query. */
   private def isolatedChild(sfDir: String, names: Seq[String]): Unit = {
     val spark = SparkSession.builder()
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
@@ -405,9 +404,8 @@ object Bench {
     // needed receipts in the harness, not in scratch files): every
     // query whose in-battery min exceeds SPARK_GRAFT_ISOLATED_MIN_SEC
     // (default 1.5 s — the heavyweights whose drift moves the total)
-    // re-measures in a FRESH child JVM, one per query, with the
-    // ScratchTiming protocol (min-of-2 back-to-back, young heap,
-    // |1|-sized catalog). The parent session stops FIRST so children
+    // re-measures in a FRESH child JVM, one per query: min-of-2
+    // back-to-back, young heap, |1|-sized catalog. The parent session stops FIRST so children
     // measure on an idle machine. "isolated_total" substitutes the
     // isolated time where measured and the in-battery min elsewhere —
     // comparable-query drift with a cause in the code moves BOTH

@@ -59,12 +59,6 @@ object City {
         case ((ub, _, _, _, _, adv), rest) => when(pm25 <= lit(ub), lit(adv)).otherwise(rest)
       })
 
-  /** struct(value, category, health_advisory) — the simulator's `aqi` payload. */
-  def aqiStruct(pm25: Column): Column = struct(
-    aqiValue(pm25).as("value"),
-    aqiCategory(pm25).as("category"),
-    aqiAdvisory(pm25).as("health_advisory"))
-
   // ------------------------------------------------------- congestion (F2/F3)
 
   /** 2-factor classification (edge sensors): occupancy OR speed thresholds. */
@@ -134,9 +128,6 @@ object City {
                 vehicleId: Column, edgeId: Column, trafficLightId: Column): Column =
     coalesce(sensorId, parkingLotId, vehicleId, edgeId, trafficLightId,
       element_at(split(mqttTopic, "/"), -1))
-
-  /** MQTT id char sanitization: '#','+' → '_' (sumo_mqtt_connector.py:269). */
-  def sanitizeTopicId(c: Column): Column = translate(c, "#+", "__")
 
   /** P6: broker-internal `$SYS/` topics the bridge skips
     * (mqtt_to_kafka_bridge.py:161-162). */

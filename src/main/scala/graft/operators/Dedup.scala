@@ -485,33 +485,6 @@ object Dedup {
     size(filter(zip_with(sigA, sigB, (a, b) => (a === b).cast("int")), x => x === 1))
       .cast("double") / size(sigA)
 
-  /** LSH banding: one row per (band_id, band_hash) per doc. Docs sharing
-    * any band bucket are candidate pairs — P(collision) ≈ 1-(1-s^r)^b.
-    * Band keys come from the sketch kernel (signature already folded);
-    * the signature rides along for similarity estimation. */
-  def lshBuckets(df: DataFrame, idCol: String, textCol: String,
-                 numHashes: Int = 128, bands: Int = 16, shingleK: Int = 5): DataFrame =
-    minhashSketches(df, idCol, textCol, numHashes, bands, shingleK)
-      .select(col("doc_id"), col("mh.sig").as("sig"), posexplode(col("mh.bands")))
-      .withColumnRenamed("pos", "band_id")
-      .withColumnRenamed("col", "band_hash")
-
-  /** Candidate pairs from shared LSH buckets (doc_a < doc_b), deduped
-    * across bands, with MinHash-estimated Jaccard attached. The band
-    * self-join carries ids only (keeps the shuffle narrow); signatures
-    * join back onto the deduped pair set. */
-  def minhashCandidates(df: DataFrame, idCol: String, textCol: String,
-                        numHashes: Int = 128, bands: Int = 16,
-                        shingleK: Int = 5): DataFrame = {
-    val sk = minhashSketches(df, idCol, textCol, numHashes, bands, shingleK)
-    val sigs = sk.select(col("doc_id"), col("mh.sig").as("sig"))
-    bandedPairs(sk)
-      .join(sigs.toDF("doc_a", "sig_a"), "doc_a")
-      .join(sigs.toDF("doc_b", "sig_b"), "doc_b")
-      .select(col("doc_a"), col("doc_b"),
-        minhashSimilarity(col("sig_a"), col("sig_b")).as("est_jaccard"))
-  }
-
   /** Full MinHash+LSH near-dup detection with exact shingle-set Jaccard
     * verification of candidates. Returns pairs ≥ threshold. Verification
     * compares distinct hashed-shingle sets (identical to string-set
