@@ -1,9 +1,11 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.functions.{City, Text}
-import graft.sources.Tables
+import graft.sources.{Scratch, Tables}
 
 /** Driver contract — one `queries` entry per implemented operator from
   * SURVEY.md §2, each with a DuckDB-equivalent `oracleSql` (column names
@@ -19,52 +21,28 @@ object SparkEntry {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)
 
-  /** 25 deterministic near-duplicate probe vectors for the ANN oracles
-    * (q33/q33b/q35/q35b): clone j∈[0,5) of query q∈[0,5) has id
-    * 100000 + 5q + j and the query's embedding with coordinate 0
-    * shifted by +0.01·(j+1). The shift is double arithmetic followed by
-    * one float cast — bit-identical to DuckDB's
-    * `CAST(embedding[1] + 0.01*(j+1) AS FLOAT)` — so both engines score
-    * the exact same vectors. Cosines land ≥ ~0.9987 while the corpus
-    * max is ≈ 0.6: exact top-5 per query = its clone set. */
-  /** Dataset-identity tag for build-once catalog tables: directory
-    * hash PLUS a cheap content fingerprint — row count, max doc_id,
-    * and an order-independent xxhash64 checksum over (doc_id, text
-    * length) — of the documents table, memoized per dir for the
-    * session. The checksum catches in-place regeneration of the
-    * testdata with the same count and max id but different content,
-    * which a count+max probe alone would serve a stale index for; it
-    * is one narrow agg paid once per JVM (bit_xor keeps it overflow-
-    * free under ANSI arithmetic). */
-  /** Best-effort recursive delete of a session temp dir (streaming
-    * checkpoints that are one-shot by design). */
-  private def deleteRecursively(dir: java.nio.file.Path): Unit =
-    try {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    } catch { case _: Throwable => () }
+  /** Dataset-identity tag for build-once tables and dirs: the dir's
+    * hash plus, per named table, its row count and an
+    * order-independent xxhash64 checksum over every column, memoized
+    * per (tables, dir) for the JVM. The checksum catches in-place
+    * regeneration of the testdata with the same row count, which a
+    * count probe alone would serve a stale artifact for; it is one
+    * narrow agg per table paid once per JVM (bit_xor keeps it
+    * overflow-free under ANSI arithmetic). */
+  private val tagCache =
+    new java.util.concurrent.ConcurrentHashMap[(Seq[String], String), String]()
+  private def dataTag(s: SparkSession, dir: String, tables: String*): String =
+    tagCache.computeIfAbsent((tables, dir), _ =>
+      tables.map { name =>
+        val df = t(s, dir, name)
+        val r = df.agg(count(lit(1)),
+          coalesce(bit_xor(xxhash64(df.columns.map(col).toSeq: _*)), lit(0L))).head()
+        s"_${r.getLong(0)}_" + java.lang.Long.toHexString(r.getLong(1))
+      }.mkString(java.lang.Integer.toHexString(dir.hashCode), "", ""))
 
-  private val docsTagCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** [[dataTag]] of the documents table, the one most artifacts key on. */
   private def docsTag(s: SparkSession, dir: String): String =
-    docsTagCache.computeIfAbsent(dir, d => {
-      val r = t(s, d, "documents")
-        .agg(count(lit(1)).as("n"), max(col("doc_id")).as("m"),
-          bit_xor(xxhash64(col("doc_id"), length(col("text")))).as("c")).head()
-      java.lang.Integer.toHexString(d.hashCode) +
-        s"_${r.getLong(0)}_${r.getLong(1)}_" + java.lang.Long.toHexString(r.getLong(2))
-    })
-
-  /** The docsTag scheme over the events table (q77's upsert target). */
-  private val eventsTagCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def eventsTag(s: SparkSession, dir: String): String =
-    eventsTagCache.computeIfAbsent(dir, d => {
-      val r = t(s, d, "events")
-        .agg(count(lit(1)).as("n"), max(col("event_id")).as("m"),
-          bit_xor(xxhash64(col("event_id"), col("ts"), col("value"))).as("c")).head()
-      java.lang.Integer.toHexString(d.hashCode) +
-        s"_${r.getLong(0)}_${r.getLong(1)}_" + java.lang.Long.toHexString(r.getLong(2))
-    })
+    dataTag(s, dir, "documents")
 
   /** Shared build-once n-gram index tables (q31b build/serve, q62
     * cluster dedup): dataset identity (path + content fingerprint) AND
@@ -136,7 +114,6 @@ object SparkEntry {
   private def ensureStreamedLmTables(s: SparkSession,
                                      dir: String): (String, String) = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val tag = docsTag(s, dir)
     val (bigT, tokT) = (s"graft_q163_big_$tag", s"graft_q163_tok_$tag")
     if (!s.catalog.tableExists(bigT) || !s.catalog.tableExists(tokT)) {
@@ -156,45 +133,15 @@ object SparkEntry {
       }
       val rows = t(s, dir, "documents").select("doc_id", "text")
         .as[(Long, String)].collect()
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, String)]
-      val ckptDir = graft.sources.Scratch.dir("graft_q163_ckpt")
-      val q = graft.streaming.Maintenance.streamingBigramModel(
-        mem.toDF().toDF("doc_id", "text"), "doc_id", "text",
-        bigT, tokT, ckptDir.toString)
-      try {
-        rows.grouped(math.max(1, rows.length / 3 + 1)).foreach { chunk =>
-          mem.addData(chunk.toSeq: _*)
-          q.processAllAvailable()
-        }
-      } finally {
-        q.stop()
-        // one-shot checkpoint: the stream never restarts from it (a
-        // missing table forces a from-scratch rebuild above), so the
-        // temp dir is pure litter after stop
-        deleteRecursively(ckptDir)
+      streamRows(s, rows) { (in, ckpt) =>
+        graft.streaming.Maintenance.streamingBigramModel(
+          in.toDF("doc_id", "text"), "doc_id", "text", bigT, tokT, ckpt)
       }
       s.catalog.refreshTable(bigT)
       s.catalog.refreshTable(tokT)
     }
     (bigT, tokT)
   }
-
-  /** The docsTag scheme over the trade graph's raw inputs (q95b's
-    * edge tables). */
-  private val tradeTagCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def tradeTag(s: SparkSession, dir: String): String =
-    tradeTagCache.computeIfAbsent(dir, d => {
-      val r = t(s, d, "orders")
-        .agg(count(lit(1)).as("n"),
-          bit_xor(xxhash64(col("o_orderkey"), col("o_custkey"))).as("c")).head()
-      val r2 = t(s, d, "lineitem")
-        .agg(count(lit(1)).as("n"),
-          bit_xor(xxhash64(col("l_orderkey"), col("l_suppkey"))).as("c")).head()
-      java.lang.Integer.toHexString(d.hashCode) +
-        s"_${r.getLong(0)}_" + java.lang.Long.toHexString(r.getLong(1)) +
-        s"_${r2.getLong(0)}_" + java.lang.Long.toHexString(r2.getLong(1))
-    })
 
   /** Build-once customer<->supplier trade-graph edge tables (q95b):
     * the q95 edge derivation — the join+distinct+mirror+out-degree
@@ -205,7 +152,7 @@ object SparkEntry {
     // b32 = the bucketed layout version: existence-keyed idempotence
     // must not serve a pre-bucketing table under the no-repartition
     // serve path
-    val tbl = s"graft_q95b_edges_b32_${tradeTag(s, dir)}"
+    val tbl = s"graft_q95b_edges_b32_${dataTag(s, dir, "orders", "lineitem")}"
     graft.operators.Graph.ensureEdgeTable(s, {
       val pairs = t(s, dir, "orders").select("o_orderkey", "o_custkey")
         .join(t(s, dir, "lineitem").select("l_orderkey", "l_suppkey"),
@@ -219,17 +166,6 @@ object SparkEntry {
     tbl
   }
 
-  /** The docsTag scheme over the embeddings table (q88b's index). */
-  private val embTagCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def embTag(s: SparkSession, dir: String): String =
-    embTagCache.computeIfAbsent(dir, d => {
-      val r = t(s, d, "embeddings")
-        .agg(count(lit(1)).as("n"), max(col("vec_id")).as("m"),
-          bit_xor(xxhash64(col("vec_id"), size(col("embedding")))).as("c")).head()
-      java.lang.Integer.toHexString(d.hashCode) +
-        s"_${r.getLong(0)}_${r.getLong(1)}_" + java.lang.Long.toHexString(r.getLong(2))
-    })
-
   /** Build-once IVFADC index tables for q88b (corpus = embeddings ∪
     * ann clones): cell-tagged code rows, the centroid frame, and the
     * PQ codebook frame — the three artifacts [[graft.operators.Similarity]]'s
@@ -237,7 +173,7 @@ object SparkEntry {
     * discipline: keyed on table existence, dataset identity in the
     * names. */
   private def ensureIvfPqTables(s: SparkSession, dir: String): (String, String, String) = {
-    val tag = embTag(s, dir)
+    val tag = dataTag(s, dir, "embeddings")
     val (idxT, centT, cbT) =
       (s"graft_q88b_idx_$tag", s"graft_q88b_cent_$tag", s"graft_q88b_cb_$tag")
     if (!s.catalog.tableExists(idxT) || !s.catalog.tableExists(centT) ||
@@ -327,17 +263,18 @@ object SparkEntry {
         lit(" guide</a></body></html>")).as("html"))
   }
 
-  /** Hash of the compiled classfiles whose code SHAPES the derived
-    * artifacts — unlike the WARC fixture dirs (which cache INPUTS
-    * built from a frozen template), the derived dirs cache operator
-    * OUTPUTS, so a code change to the producing operators must
-    * invalidate them or the battery would keep validating artifacts an
-    * older build wrote. The stamp walks the WHOLE compiled `graft`
-    * package tree (names + mtimes): a body-only edit recompiles just
-    * its own file, so probing a fixed class list would miss e.g. a
-    * `Url.surt` change that reshapes every CDXJ key. Unchanged builds
-    * (bench child JVMs, the two bench passes, Verify) share the stamp
-    * and the cache; any recompile rebuilds once. When classes load
+  /** Hash of the compiled classfiles, stamped into every build-once
+    * tmp dir ([[ensureDerivedDir]]): the WARC input fixtures are built
+    * by graft code (`Warc.buildSegment`, `httpResponse`, `gzipBytes`,
+    * …) and the streamed and derived exports are operator OUTPUTS, so
+    * any code change must invalidate them or the battery would keep
+    * validating bytes an older build wrote. The stamp walks the WHOLE
+    * compiled `graft` package tree (names + mtimes): a body-only edit
+    * recompiles just its own file, so probing a fixed class list would
+    * miss e.g. a `Url.surt` change that reshapes every CDXJ key.
+    * Unchanged builds (bench child JVMs, the two bench passes,
+    * Verify) share the stamp and the cache; any recompile rebuilds
+    * once. When classes load
     * from a JAR (sbt's forked runMain packages a fresh bg-jobs jar
     * PER INVOCATION, so the jar's own mtime would rebuild every run),
     * the stamp hashes the `graft/` entries' CRCs instead —
@@ -380,61 +317,65 @@ object SparkEntry {
     f"${acc & 0xffffffffL}%08x"
   }
 
-  /** Build-once DERIVED-ARTIFACT dir (round-13 ADVICE: q146/q147/q151
-    * created a fresh `createTempDirectory` per invocation, so the
-    * bench's warm-up + min-of-2 protocol re-ran each full WAT/CDXJ
-    * export three times per leg and accumulated unbounded temp-dir
-    * garbage). Keyed by query name + docsTag + [[derivedCodeStamp]];
-    * `build` populates a staging dir that is renamed into place, so
-    * timed attempts measure SERVE rather than re-export and a crashed
-    * build can never publish a half-written artifact. Older-stamp
-    * siblings for the same (name, docsTag) are pruned before staging —
-    * iterative recompiles must not strand one corpus-sized export per
-    * build in the temp dir. */
-  private def ensureDerivedDir(s: SparkSession, dir: String, name: String)
-                              (build: String => Unit): String = {
+  /** The one build-once convention for tmp artifacts (the WARC
+    * fixtures, the streamed WET/WAT exports, the derived WAT/CDXJ and
+    * merge outputs): a dir keyed by `name` + docsTag +
+    * [[derivedCodeStamp]], so the bench's warm-up + min-of-2 protocol
+    * times SERVE rather than re-export. `build` populates a staging
+    * dir that is renamed into place: a build that throws publishes
+    * nothing, and the next call clears its stage and builds again.
+    * Older-stamp siblings for the same (name, docsTag) are pruned
+    * before staging — iterative recompiles must not strand one
+    * corpus-sized export per build in the temp dir. */
+  private[graft] def ensureDerivedDir(s: SparkSession, dir: String, name: String)
+                                     (build: String => Unit): String = {
     val prefix = s"graft_${name}_${docsTag(s, dir)}"
     val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
-    val out = new java.io.File(tmp, s"${prefix}_$derivedCodeStamp").toString
-    val root = new java.io.File(out)
+    val root = new java.io.File(tmp, s"${prefix}_$derivedCodeStamp")
     if (!root.exists()) {
-      def rmTree(f: java.io.File): Unit = {
-        if (f.isDirectory) {
-          val kids = f.listFiles()
-          if (kids != null) kids.foreach(rmTree)
-        }
-        f.delete()
-      }
-      // prune stale-stamp siblings (and any pre-stamp-era dir/stage)
       val stale = tmp.listFiles()
       if (stale != null) stale
         .filter(f => f.getName.startsWith(prefix) &&
-          !f.getName.startsWith(s"${prefix}_$derivedCodeStamp"))
-        .foreach(rmTree)
-      val stage = new java.io.File(out + "_stage")
-      if (stage.exists()) rmTree(stage)
+          !f.getName.startsWith(root.getName))
+        .foreach(Scratch.deleteRecursively)
+      val stage = new java.io.File(s"${root}_stage")
+      Scratch.deleteRecursively(stage)
       stage.mkdirs()
       build(stage.toString)
       if (!stage.renameTo(root))
-        require(root.exists(), s"derived-dir rename failed for $out")
+        require(root.exists(), s"build-once rename failed for $root")
     }
-    out
+    root.toString
+  }
+
+  /** The MemoryStream harness behind every streamed battery leg: the
+    * collected `rows` (the S5 situation — no message bus in the
+    * battery) arrive in chunks of `n / 3 + 1` rows, in order, through
+    * the query `start` builds from the stream frame and a checkpoint
+    * dir; each chunk is fully processed before the next is added, so
+    * batch ids follow the chunks. The query is stopped and its
+    * one-shot checkpoint deleted whatever happens — nothing ever
+    * restarts from it. */
+  private[graft] def streamRows[T: Encoder](s: SparkSession, rows: collection.Seq[T])(
+      start: (DataFrame, String) => StreamingQuery): Unit = {
+    val mem = MemoryStream[T](s)
+    val ckpt = Scratch.dir("graft_stream_ckpt").toFile
+    try {
+      val q = start(mem.toDF(), ckpt.toString)
+      try rows.grouped(rows.length / 3 + 1).foreach { c =>
+        mem.addData(c.toSeq: _*)
+        q.processAllAvailable()
+      } finally q.stop()
+    } finally Scratch.deleteRecursively(ckpt)
   }
 
   /** Build-once WARC fixture for q115/q116: real `.warc` segment
     * files (every other one whole-file GZIPPED to keep that path
     * live), 25 docs per segment, each segment = one warcinfo record +
     * a request/response pair per doc; response bodies are the
-    * [[mainTextPages]] HTML verbatim. Staged-then-renamed so a
-    * crashed build can never serve a half-written fixture. */
-  private def ensureWarcDir(s: SparkSession, dir: String): String = {
-    val wdir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_q115_warc_${docsTag(s, dir)}").toString
-    val root = new java.io.File(wdir)
-    if (!root.exists()) {
-      val stage = new java.io.File(wdir + "_stage")
-      if (stage.exists()) stage.listFiles().foreach(_.delete())
-      stage.mkdirs()
+    * [[mainTextPages]] HTML verbatim. */
+  private def ensureWarcDir(s: SparkSession, dir: String): String =
+    ensureDerivedDir(s, dir, "q115_warc") { stage =>
       val rows = mainTextPages(s, dir)
         .select(col("doc_id"), col("html")).collect()
         .map(r => r.getLong(0) -> r.getString(1))
@@ -460,28 +401,17 @@ object SparkEntry {
             (f"seg-$seg%05d.warc.gz", bos.toByteArray)
           }
         java.nio.file.Files.write(
-          java.nio.file.Paths.get(stage.toString, name), out)
-      }
-      if (!stage.renameTo(root)) {
-        require(root.exists(), s"WARC fixture rename failed for $wdir")
+          java.nio.file.Paths.get(stage, name), out)
       }
     }
-    wdir
-  }
 
   /** Build-once WARC fixture for q128: every response body rides a
     * different HTTP wire encoding by doc_id%5 — identity, chunked,
     * gzip, deflate, chunked-over-gzip — around the SAME closed-form
     * text, so the decoded output is a pure function of the documents
     * table regardless of encoding. */
-  private def ensureHttpWarcDir(s: SparkSession, dir: String): String = {
-    val wdir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_q128_warc_${docsTag(s, dir)}").toString
-    val root = new java.io.File(wdir)
-    if (!root.exists()) {
-      val stage = new java.io.File(wdir + "_stage")
-      if (stage.exists()) stage.listFiles().foreach(_.delete())
-      stage.mkdirs()
+  private def ensureHttpWarcDir(s: SparkSession, dir: String): String =
+    ensureDerivedDir(s, dir, "q128_warc") { stage =>
       val rows = t(s, dir, "documents").select(col("doc_id"), col("text"))
         .collect().map(r => r.getLong(0) -> r.getString(1))
       rows.groupBy(_._1 / 25).foreach { case (seg, docs) =>
@@ -505,29 +435,18 @@ object SparkEntry {
             s"https://site${id % 20}.example.com/dir/page$id.html", payload)
         }.toSeq
         java.nio.file.Files.write(
-          java.nio.file.Paths.get(stage.toString, f"seg-$seg%05d.warc"),
+          java.nio.file.Paths.get(stage, f"seg-$seg%05d.warc"),
           graft.sources.Warc.buildSegment(records))
       }
-      if (!stage.renameTo(root)) {
-        require(root.exists(), s"WARC fixture rename failed for $wdir")
-      }
     }
-    wdir
-  }
 
   /** Build-once WARC fixture for q130: per doc a redirect CHAIN —
     * /start (301, relative Location) → /hop (302, absolute Location
     * onto the NEXT host) → /final (200 content); every 10th doc is a
     * 2-cycle /start ⇄ /loop instead. Exercises relative resolution,
     * cross-host hops, and the loop cap closed-form. */
-  private def ensureRedirectWarcDir(s: SparkSession, dir: String): String = {
-    val wdir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_q130_warc_${docsTag(s, dir)}").toString
-    val root = new java.io.File(wdir)
-    if (!root.exists()) {
-      val stage = new java.io.File(wdir + "_stage")
-      if (stage.exists()) stage.listFiles().foreach(_.delete())
-      stage.mkdirs()
+  private def ensureRedirectWarcDir(s: SparkSession, dir: String): String =
+    ensureDerivedDir(s, dir, "q130_warc") { stage =>
       val ids = t(s, dir, "documents").select(col("doc_id"))
         .collect().map(_.getLong(0))
       val W = graft.sources.Warc
@@ -553,15 +472,10 @@ object SparkEntry {
               W.httpResponse(s"terminal $id".getBytes("UTF-8"))))
         }.toSeq
         java.nio.file.Files.write(
-          java.nio.file.Paths.get(stage.toString, f"seg-$seg%05d.warc"),
+          java.nio.file.Paths.get(stage, f"seg-$seg%05d.warc"),
           W.buildSegment(records))
       }
-      if (!stage.renameTo(root)) {
-        require(root.exists(), s"WARC fixture rename failed for $wdir")
-      }
     }
-    wdir
-  }
 
   /** Build-once WARC fixture for q132: every doc a digest-stamped
     * response (`WARC-Payload-Digest` = sha1-base32 of the HTTP body —
@@ -569,14 +483,8 @@ object SparkEntry {
     * `revisit` record whose digest points at doc_id−1's body — the
     * refetch-dedup pointer a real crawl emits instead of storing the
     * duplicate payload. */
-  private def ensureRevisitWarcDir(s: SparkSession, dir: String): String = {
-    val wdir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_q132_warc_${docsTag(s, dir)}").toString
-    val root = new java.io.File(wdir)
-    if (!root.exists()) {
-      val stage = new java.io.File(wdir + "_stage")
-      if (stage.exists()) stage.listFiles().foreach(_.delete())
-      stage.mkdirs()
+  private def ensureRevisitWarcDir(s: SparkSession, dir: String): String =
+    ensureDerivedDir(s, dir, "q132_warc") { stage =>
       val rows = t(s, dir, "documents").select(col("doc_id"), col("text"))
         .collect().map(r => r.getLong(0) -> r.getString(1))
       val bodyOf = rows.toMap.map { case (id, text) =>
@@ -599,15 +507,10 @@ object SparkEntry {
           else Seq(resp)
         }.toSeq
         java.nio.file.Files.write(
-          java.nio.file.Paths.get(stage.toString, f"seg-$seg%05d.warc"),
+          java.nio.file.Paths.get(stage, f"seg-$seg%05d.warc"),
           W.buildSegmentWithHeaders(records))
       }
-      if (!stage.renameTo(root)) {
-        require(root.exists(), s"WARC fixture rename failed for $wdir")
-      }
     }
-    wdir
-  }
 
   /** Build-once WARC fixture for q136: the CDX corpus — segments of
     * digest-stamped `text/plain` responses whose bodies are a pure
@@ -616,14 +519,8 @@ object SparkEntry {
     * `Inflater` byte accounting) except every third segment, which
     * stays plain so the uncompressed offset path rides the same
     * oracle. */
-  private def ensureCdxWarcDir(s: SparkSession, dir: String): String = {
-    val wdir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_q136_warc_${docsTag(s, dir)}").toString
-    val root = new java.io.File(wdir)
-    if (!root.exists()) {
-      val stage = new java.io.File(wdir + "_stage")
-      if (stage.exists()) stage.listFiles().foreach(_.delete())
-      stage.mkdirs()
+  private def ensureCdxWarcDir(s: SparkSession, dir: String): String =
+    ensureDerivedDir(s, dir, "q136_warc") { stage =>
       val W = graft.sources.Warc
       val rows = t(s, dir, "documents").select(col("doc_id"), col("text"))
         .collect().map(r => r.getLong(0) -> r.getString(1))
@@ -648,14 +545,9 @@ object SparkEntry {
               recs.map(r => W.gzipBytes(W.buildSegmentWithHeaders(Seq(r))))
                 .reduce(_ ++ _))
         java.nio.file.Files.write(
-          java.nio.file.Paths.get(stage.toString, name), bytes)
-      }
-      if (!stage.renameTo(root)) {
-        require(root.exists(), s"WARC fixture rename failed for $wdir")
+          java.nio.file.Paths.get(stage, name), bytes)
       }
     }
-    wdir
-  }
 
   /** Build-once WARC fixture for q148: THREE crawl batches over the
     * same URL space — every doc captured on 2026-01-01 (version 1)
@@ -664,14 +556,8 @@ object SparkEntry {
     * per-record-gzip-member segment set (the re-fetch reality a
     * latest-capture-wins corpus build dedups), every response
     * digest-stamped. */
-  private def ensureMultiCaptureWarcDir(s: SparkSession, dir: String): String = {
-    val wdir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_q148_warc_${docsTag(s, dir)}").toString
-    val root = new java.io.File(wdir)
-    if (!root.exists()) {
-      val stage = new java.io.File(wdir + "_stage")
-      if (stage.exists()) stage.listFiles().foreach(_.delete())
-      stage.mkdirs()
+  private def ensureMultiCaptureWarcDir(s: SparkSession, dir: String): String =
+    ensureDerivedDir(s, dir, "q148_warc") { stage =>
       val W = graft.sources.Warc
       val ids = t(s, dir, "documents").select(col("doc_id"))
         .collect().map(_.getLong(0))
@@ -693,16 +579,11 @@ object SparkEntry {
             .map(r => W.gzipBytes(W.buildSegmentWithHeaders(Seq(r), date)))
             .reduce(_ ++ _)
           java.nio.file.Files.write(
-            java.nio.file.Paths.get(stage.toString,
+            java.nio.file.Paths.get(stage,
               f"crawl-$tag-seg-$seg%05d.warc.gz"), bytes)
         }
       }
-      if (!stage.renameTo(root)) {
-        require(root.exists(), s"WARC fixture rename failed for $wdir")
-      }
     }
-    wdir
-  }
 
   /** Build-once WARC fixture for q170: crawl A captures every page
     * with a body, an `ETag`, and a `Last-Modified`; crawl B (one day
@@ -710,14 +591,8 @@ object SparkEntry {
     * Modified` (empty body, same ETag echoed), the rest ship fresh
     * bodies under a NEW ETag. Per-record gzip members like the q148
     * fixture so the resolved locators are ranged-fetchable. */
-  private def ensureRevalWarcDir(s: SparkSession, dir: String): String = {
-    val wdir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_q170_warc_${docsTag(s, dir)}").toString
-    val root = new java.io.File(wdir)
-    if (!root.exists()) {
-      val stage = new java.io.File(wdir + "_stage")
-      if (stage.exists()) stage.listFiles().foreach(_.delete())
-      stage.mkdirs()
+  private def ensureRevalWarcDir(s: SparkSession, dir: String): String =
+    ensureDerivedDir(s, dir, "q170_warc") { stage =>
       val W = graft.sources.Warc
       val ids = t(s, dir, "documents").select(col("doc_id"))
         .collect().map(_.getLong(0))
@@ -734,7 +609,7 @@ object SparkEntry {
             .map(r => W.gzipBytes(W.buildSegmentWithHeaders(Seq(r), date)))
             .reduce(_ ++ _)
           java.nio.file.Files.write(
-            java.nio.file.Paths.get(stage.toString,
+            java.nio.file.Paths.get(stage,
               f"reval-$tag-seg-$sg%05d.warc.gz"), bytes)
         }
       seg("a", "2026-02-01T00:00:00Z", ids.toSeq, { id =>
@@ -758,12 +633,7 @@ object SparkEntry {
             Seq(s"WARC-Payload-Digest: ${W.sha1Base32(body)}"))
         }
       })
-      if (!stage.renameTo(root)) {
-        require(root.exists(), s"WARC fixture rename failed for $wdir")
-      }
     }
-    wdir
-  }
 
   /** Build-once WARC fixture for q154: responses carrying
     * `X-Robots-Tag` headers by doc_id%4 — absent / `noindex` / an
@@ -772,14 +642,8 @@ object SparkEntry {
     * body declares `<meta name=robots content=nofollow>`, so the
     * cross-layer most-restrictive combine is exercised in both
     * directions. */
-  private def ensureXRobotsWarcDir(s: SparkSession, dir: String): String = {
-    val wdir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_q154_warc_${docsTag(s, dir)}").toString
-    val root = new java.io.File(wdir)
-    if (!root.exists()) {
-      val stage = new java.io.File(wdir + "_stage")
-      if (stage.exists()) stage.listFiles().foreach(_.delete())
-      stage.mkdirs()
+  private def ensureXRobotsWarcDir(s: SparkSession, dir: String): String =
+    ensureDerivedDir(s, dir, "q154_warc") { stage =>
       val W = graft.sources.Warc
       val ids = t(s, dir, "documents").select(col("doc_id"))
         .collect().map(_.getLong(0))
@@ -803,15 +667,10 @@ object SparkEntry {
               extraHeaders = hdrs))
         }.toSeq
         java.nio.file.Files.write(
-          java.nio.file.Paths.get(stage.toString, f"seg-$seg%05d.warc"),
+          java.nio.file.Paths.get(stage, f"seg-$seg%05d.warc"),
           W.buildSegment(records))
       }
-      if (!stage.renameTo(root)) {
-        require(root.exists(), s"WARC fixture rename failed for $wdir")
-      }
     }
-    wdir
-  }
 
   /** The q56/q56b corpus: documents plus docs 0-4 cloned at id+300000
     * with a sub-k marker suffix (contributes no shared 30-gram of its
@@ -1011,6 +870,14 @@ object SparkEntry {
     if (sz < BigInt(split) * cores) df.repartition(cores, col(key)) else df
   }
 
+  /** 25 deterministic near-duplicate probe vectors for the ANN oracles
+    * (q33/q33b/q35/q35b): clone j∈[0,5) of query q∈[0,5) has id
+    * 100000 + 5q + j and the query's embedding with coordinate 0
+    * shifted by +0.01·(j+1). The shift is double arithmetic followed by
+    * one float cast — bit-identical to DuckDB's
+    * `CAST(embedding[1] + 0.01*(j+1) AS FLOAT)` — so both engines score
+    * the exact same vectors. Cosines land ≥ ~0.9987 while the corpus
+    * max is ≈ 0.6: exact top-5 per query = its clone set. */
   private[graft] def annClones(emb: DataFrame): DataFrame =
     emb.filter(col("vec_id") < 5)
       .select(col("vec_id"), col("embedding"),
@@ -1514,24 +1381,16 @@ object SparkEntry {
     // encode (spec-pinned, with replay idempotence).
     "q88c_ivfpq_stream" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val (_, centT, cbT) = ensureIvfPqTables(s, dir)
-      val tbl = s"graft_q88c_idx_${embTag(s, dir)}"
+      val tbl = s"graft_q88c_idx_${dataTag(s, dir, "embeddings")}"
       val emb = t(s, dir, "embeddings").select("vec_id", "embedding")
       if (!s.catalog.tableExists(tbl)) {
         val all = emb.union(annClones(emb)).as[(Long, Seq[Float])].collect()
-        val mem = org.apache.spark.sql.execution.streaming.runtime
-          .MemoryStream[(Long, Seq[Float])]
-        val ckpt = graft.sources.Scratch.dir("graft_q88c_ckpt").toString
-        val q = graft.streaming.Maintenance.streamingIvfPqIndex(
-          mem.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
-          tbl, centT, cbT, ckpt)
-        try {
-          all.grouped(math.max(1, all.length / 3 + 1)).foreach { chunk =>
-            mem.addData(chunk.toSeq: _*)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
+        streamRows(s, all) { (in, ckpt) =>
+          graft.streaming.Maintenance.streamingIvfPqIndex(
+            in.toDF("vec_id", "embedding"), "vec_id", "embedding",
+            tbl, centT, cbT, ckpt)
+        }
         s.catalog.refreshTable(tbl)
       }
       val cm = graft.operators.Similarity.centroidsFromDF(s.table(centT))
@@ -1934,25 +1793,16 @@ object SparkEntry {
     // move one score.
     "q139_bm25_stream" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val statsT = s"graft_q139_stats_${docsTag(s, dir)}"
       val dlT = s"graft_q139_dl_${docsTag(s, dir)}"
       if (!s.catalog.tableExists(dlT)) {
         val rows = t(s, dir, "documents").select(col("doc_id"), col("text"))
           .as[(Long, String)].collect().sortBy(_._1)
-        val mem = org.apache.spark.sql.execution.streaming.runtime
-          .MemoryStream[(Long, String)]
-        val ckpt = graft.sources.Scratch
-          .dir("graft_q139_ckpt").toString
-        val q = graft.streaming.Maintenance.streamingBm25(
-          mem.toDF().toDF("doc_id", "text"), "doc_id", "text",
-          statsT, dlT, ckpt)
-        try {
-          rows.grouped(math.max(1, rows.length / 3 + 1)).foreach { chunk =>
-            mem.addData(chunk.toSeq: _*)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
+        streamRows(s, rows) { (in, ckpt) =>
+          graft.streaming.Maintenance.streamingBm25(
+            in.toDF("doc_id", "text"), "doc_id", "text",
+            statsT, dlT, ckpt)
+        }
       }
       val replayed = graft.operators.Retrieval.appendToBm25Tables(s,
         t(s, dir, "documents"), "doc_id", "text", statsT, dlT)
@@ -2406,25 +2256,16 @@ object SparkEntry {
     // MemoryStream test harness (the S5 situation), not the operator.
     "q161_anchor_stream" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val tbl = s"graft_q161_anchor_${docsTag(s, dir)}"
       val pages = anchorHubPages(s, dir)
       if (!s.catalog.tableExists(tbl)) {
         val rows = pages.select("doc_id", "url", "html")
           .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2)))
-        val mem = org.apache.spark.sql.execution.streaming.runtime
-          .MemoryStream[(Long, String, String)]
-        val ckpt = graft.sources.Scratch
-          .dir("graft_q161_ckpt").toString
-        val q = graft.streaming.Maintenance.streamingAnchorEdges(
-          mem.toDF().toDF("doc_id", "url", "html"),
-          "doc_id", "url", "html", tbl, ckpt)
-        try {
-          rows.grouped(math.max(1, rows.length / 3 + 1)).foreach { chunk =>
-            mem.addData(chunk: _*)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
+        streamRows(s, rows) { (in, ckpt) =>
+          graft.streaming.Maintenance.streamingAnchorEdges(
+            in.toDF("doc_id", "url", "html"),
+            "doc_id", "url", "html", tbl, ckpt)
+        }
       }
       val replayed = graft.operators.Html.appendToAnchorTable(
         s, pages, "doc_id", "url", "html", tbl)
@@ -3406,31 +3247,16 @@ object SparkEntry {
     // MemoryStream test harness (the S5 situation), not the operator.
     "q150_wat_stream" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val root = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_q150_wat_${docsTag(s, dir)}").toString
-      val done = new java.io.File(root, "_graft_done")
-      if (!done.exists()) {
-        val wdir = ensureWarcDir(s, dir)
-        val W = graft.sources.Warc
+      val root = ensureDerivedDir(s, dir, "q150_wat") { stage =>
         val wat = graft.operators.Html.watMetadata(
-            W.readWarc(s, wdir).filter(col("warc_type") === "response"),
+            graft.sources.Warc.readWarc(s, ensureWarcDir(s, dir))
+              .filter(col("warc_type") === "response"),
             "target_uri", "body", "warc_date", "payload_digest")
           .as[(String, String)].collect().sortBy(_._1)
-        val mem = org.apache.spark.sql.execution.streaming.runtime
-          .MemoryStream[(String, String)]
-        val ckpt = graft.sources.Scratch
-          .dir("graft_q150_ckpt").toString
-        val q = graft.streaming.Maintenance.streamingWatSegments(
-          mem.toDF().toDF("uri", "wat_json"), "uri", "wat_json", root, ckpt)
-        try {
-          wat.grouped(math.max(1, wat.length / 3 + 1)).foreach { chunk =>
-            mem.addData(chunk.toSeq: _*)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
-        java.nio.file.Files.createFile(done.toPath)
-        ()
+        streamRows(s, wat) { (in, ckpt) =>
+          graft.streaming.Maintenance.streamingWatSegments(
+            in.toDF("uri", "wat_json"), "uri", "wat_json", stage, ckpt)
+        }
       }
       val audited = graft.sources.Warc.auditAllTextSegments(s, root,
         recordType = "metadata").filter(!col("ok")).count()
@@ -3957,7 +3783,6 @@ object SparkEntry {
     // distributed end-to-end.
     "q83_stream_neardup" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val tag = docsTag(s, dir)
       val tbl = graft.operators.Dedup.NgramIncrTables(
         s"graft_q83_inv_$tag", s"graft_q83_dfreq_$tag",
@@ -3965,17 +3790,10 @@ object SparkEntry {
       if (!s.catalog.tableExists(tbl.cands)) {
         val docs = t(s, dir, "documents").select("doc_id", "text")
           .as[(Long, String)].collect()
-        val mem = org.apache.spark.sql.execution.streaming.runtime
-          .MemoryStream[(Long, String)]
-        val ckpt = graft.sources.Scratch.dir("graft_q83_ckpt").toString
-        val q = graft.streaming.Maintenance.streamingNgramIndex(
-          mem.toDF().toDF("doc_id", "text"), "doc_id", "text", tbl, ckpt)
-        try {
-          docs.grouped(math.max(1, docs.length / 3 + 1)).foreach { chunk =>
-            mem.addData(chunk.toSeq: _*)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
+        streamRows(s, docs) { (in, ckpt) =>
+          graft.streaming.Maintenance.streamingNgramIndex(
+            in.toDF("doc_id", "text"), "doc_id", "text", tbl, ckpt)
+        }
         Seq(tbl.inv, tbl.dfreq, tbl.pinv, tbl.cands)
           .foreach(s.catalog.refreshTable)
       }
@@ -3994,24 +3812,16 @@ object SparkEntry {
     // truth regardless of batching.
     "q93_stream_telemetry" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val tag = docsTag(s, dir)
       val state = s"graft_q93_tel_$tag"
       if (!s.catalog.tableExists(state)) {
         val docs = t(s, dir, "documents").select("doc_id", "source", "text")
           .as[(Long, String, String)].collect()
-        val mem = org.apache.spark.sql.execution.streaming.runtime
-          .MemoryStream[(Long, String, String)]
-        val ckpt = graft.sources.Scratch.dir("graft_q93_ckpt").toString
-        val q = graft.streaming.Maintenance.streamingTelemetry(
-          mem.toDF().toDF("doc_id", "source", "text"), "source", "text",
-          state, ckpt)
-        try {
-          docs.grouped(math.max(1, docs.length / 3 + 1)).foreach { chunk =>
-            mem.addData(chunk.toSeq: _*)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
+        streamRows(s, docs) { (in, ckpt) =>
+          graft.streaming.Maintenance.streamingTelemetry(
+            in.toDF("doc_id", "source", "text"), "source", "text",
+            state, ckpt)
+        }
         s.catalog.refreshTable(state)
       }
       graft.operators.Telemetry.report(s.table(state), "source")
@@ -4311,7 +4121,7 @@ object SparkEntry {
     // rate; q79 pins the correctness end-to-end through real files.
     "q79_pruned_read" -> ((s, dir) => {
       val zDir = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_q79_zlake_${eventsTag(s, dir)}").toString
+        s"graft_q79_zlake_${dataTag(s, dir, "events")}").toString
       val ev = t(s, dir, "events")
         .select("event_id", "user_id", "event_type", "value")
       val st = ev.agg(
@@ -4371,7 +4181,7 @@ object SparkEntry {
     // states the post-merge table in closed form.
     "q77_lake_upsert" -> ((s, dir) => {
       val lakeDir = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_q77_lake_${eventsTag(s, dir)}").toString
+        s"graft_q77_lake_${dataTag(s, dir, "events")}").toString
       val ev = t(s, dir, "events")
       val base = ev.select(col("event_id"), col("value"),
         lit(0).as("rev"), col("event_type"))
@@ -4600,8 +4410,7 @@ object SparkEntry {
     // the edges arrived.
     "q95c_pagerank_stream" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val tbl = s"graft_q95c_edges_${tradeTag(s, dir)}"
+      val tbl = s"graft_q95c_edges_${dataTag(s, dir, "orders", "lineitem")}"
       if (!s.catalog.tableExists(tbl)) {
         val pairs = t(s, dir, "orders").select("o_orderkey", "o_custkey")
           .join(t(s, dir, "lineitem").select("l_orderkey", "l_suppkey"),
@@ -4610,21 +4419,13 @@ object SparkEntry {
             (col("l_suppkey") * 2 + 1).as("sn"))
           .distinct()
           .as[(Long, Long)].collect().sortBy(identity)
-        val mem = org.apache.spark.sql.execution.streaming.runtime
-          .MemoryStream[(Long, Long)]
-        val base = mem.toDF().toDF("cn", "sn")
-        val edges = base.select(col("cn").as("src"), col("sn").as("dst"))
-          .unionByName(base.select(col("sn").as("src"), col("cn").as("dst")))
-        val ckpt = graft.sources.Scratch
-          .dir("graft_q95c_ckpt").toString
-        val q = graft.streaming.Maintenance.streamingGraphEdges(
-          edges, "src", "dst", tbl, ckpt)
-        try {
-          pairs.grouped(math.max(1, pairs.length / 3 + 1)).foreach { chunk =>
-            mem.addData(chunk.toSeq: _*)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
+        streamRows(s, pairs) { (in, ckpt) =>
+          val base = in.toDF("cn", "sn")
+          val edges = base.select(col("cn").as("src"), col("sn").as("dst"))
+            .unionByName(base.select(col("sn").as("src"), col("cn").as("dst")))
+          graft.streaming.Maintenance.streamingGraphEdges(
+            edges, "src", "dst", tbl, ckpt)
+        }
         s.catalog.refreshTable(tbl)
         s.catalog.refreshTable(tbl + "_nodes")
       }
@@ -4687,24 +4488,16 @@ object SparkEntry {
     // streamed state must answer exactly like the one-shot pass.
     "q99_stream_drift" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val tag = docsTag(s, dir)
       val state = s"graft_q99_drift_$tag"
       if (!s.catalog.tableExists(state)) {
         val docs = t(s, dir, "documents").select("doc_id", "lang", "text")
           .as[(Long, String, String)].collect()
-        val mem = org.apache.spark.sql.execution.streaming.runtime
-          .MemoryStream[(Long, String, String)]
-        val ckpt = graft.sources.Scratch.dir("graft_q99_ckpt").toString
-        val q = graft.streaming.Maintenance.streamingDriftCounts(
-          mem.toDF().toDF("doc_id", "lang", "text"), "lang", "text",
-          state, ckpt, dim = 4096)
-        try {
-          docs.grouped(math.max(1, docs.length / 3 + 1)).foreach { chunk =>
-            mem.addData(chunk.toSeq: _*)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
+        streamRows(s, docs) { (in, ckpt) =>
+          graft.streaming.Maintenance.streamingDriftCounts(
+            in.toDF("doc_id", "lang", "text"), "lang", "text",
+            state, ckpt, dim = 4096)
+        }
         s.catalog.refreshTable(state)
       }
       val st = s.table(state)
@@ -4948,7 +4741,6 @@ object SparkEntry {
     // verbatim.
     "q109_stream_minhash" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val tag = docsTag(s, dir)
       val tbl = s"graft_q109_mh_$tag"
       if (!s.catalog.tableExists(tbl)) {
@@ -4957,17 +4749,10 @@ object SparkEntry {
           .select((col("doc_id") + 100000).as("doc_id"),
             concat(col("text"), lit(" appended words")).as("text"))
         val all = docs.union(clones).as[(Long, String)].collect()
-        val mem = org.apache.spark.sql.execution.streaming.runtime
-          .MemoryStream[(Long, String)]
-        val ckpt = graft.sources.Scratch.dir("graft_q109_ckpt").toString
-        val q = graft.streaming.Maintenance.streamingMinhashSketches(
-          mem.toDF().toDF("doc_id", "text"), "doc_id", "text", tbl, ckpt)
-        try {
-          all.grouped(math.max(1, all.length / 3 + 1)).foreach { chunk =>
-            mem.addData(chunk.toSeq: _*)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
+        streamRows(s, all) { (in, ckpt) =>
+          graft.streaming.Maintenance.streamingMinhashSketches(
+            in.toDF("doc_id", "text"), "doc_id", "text", tbl, ckpt)
+        }
         s.catalog.refreshTable(tbl)
       }
       graft.operators.Dedup.minhashDedupFromSketches(s.table(tbl),
@@ -5346,7 +5131,6 @@ object SparkEntry {
     // set, slot for slot.
     "q124_frontier_stream" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val tag = docsTag(s, dir)
       val tbl = s"graft_q124_frontier_$tag"
       val mkUrl = concat(lit("https://site"),
@@ -5357,18 +5141,10 @@ object SparkEntry {
         val all = t(s, dir, "documents")
           .select(mkUrl.as("url"), col("doc_id").as("score"))
           .as[(String, Long)].collect()
-        val mem = org.apache.spark.sql.execution.streaming.runtime
-          .MemoryStream[(String, Long)]
-        val ckpt = graft.sources.Scratch
-          .dir("graft_q124_ckpt").toString
-        val q = graft.streaming.Maintenance.streamingFrontier(
-          mem.toDF().toDF("url", "score"), "url", "score", tbl, ckpt)
-        try {
-          all.grouped(math.max(1, all.length / 3 + 1)).foreach { chunk =>
-            mem.addData(chunk.toSeq: _*)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
+        streamRows(s, all) { (in, ckpt) =>
+          graft.streaming.Maintenance.streamingFrontier(
+            in.toDF("url", "score"), "url", "score", tbl, ckpt)
+        }
         s.catalog.refreshTable(tbl)
       }
       val fetched = t(s, dir, "documents")
@@ -5412,7 +5188,6 @@ object SparkEntry {
     // = the chain's x0 node, truncated at the corpus edge.
     "q126_components_stream" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val tag = docsTag(s, dir)
       val tbl = s"graft_q126_comp_$tag"
       if (!s.catalog.tableExists(tbl)) {
@@ -5420,18 +5195,10 @@ object SparkEntry {
           .filter(pmod(col("doc_id"), lit(10)).between(1, 3))
           .select(col("doc_id").as("a"), (col("doc_id") - 1).as("b"))
           .as[(Long, Long)].collect()
-        val mem = org.apache.spark.sql.execution.streaming.runtime
-          .MemoryStream[(Long, Long)]
-        val ckpt = graft.sources.Scratch
-          .dir("graft_q126_ckpt").toString
-        val q = graft.streaming.Maintenance.streamingComponents(
-          mem.toDF().toDF("a", "b"), "a", "b", tbl, ckpt)
-        try {
-          pairs.grouped(math.max(1, pairs.length / 3 + 1)).foreach { chunk =>
-            mem.addData(chunk.toSeq: _*)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
+        streamRows(s, pairs) { (in, ckpt) =>
+          graft.streaming.Maintenance.streamingComponents(
+            in.toDF("a", "b"), "a", "b", tbl, ckpt)
+        }
         s.catalog.refreshTable(tbl)
         s.catalog.refreshTable(tbl + "_remap")
       }
@@ -5693,24 +5460,15 @@ object SparkEntry {
     // must not change one locator.
     "q138_cdx_stream" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val wdir = ensureCdxWarcDir(s, dir)
       val tbl = s"graft_q138_cdx_${docsTag(s, dir)}"
       if (!s.catalog.tableExists(tbl)) {
         val files = new java.io.File(wdir).listFiles()
           .map(_.toString).sorted.toSeq
-        val mem = org.apache.spark.sql.execution.streaming.runtime
-          .MemoryStream[String]
-        val ckpt = graft.sources.Scratch
-          .dir("graft_q138_ckpt").toString
-        val q = graft.streaming.Maintenance.streamingCdx(
-          mem.toDF().toDF("path"), "path", tbl, ckpt)
-        try {
-          files.grouped(math.max(1, files.length / 3 + 1)).foreach { chunk =>
-            mem.addData(chunk: _*)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
+        streamRows(s, files) { (in, ckpt) =>
+          graft.streaming.Maintenance.streamingCdx(
+            in.toDF("path"), "path", tbl, ckpt)
+        }
       }
       val replayed = graft.sources.Warc.appendToCdxTable(s, tbl, wdir)
       require(replayed == 0L,
@@ -5777,8 +5535,8 @@ object SparkEntry {
     }),
 
     // The compliance family's STREAMING leg (Maintenance
-    // .streamingTakedowns → Corpus.appendToTakedownTable): the q137
-    // notices arrive across 3 micro-batches — a real compliance feed
+    // .streamingTakedowns → Corpus.appendToTakedownTable): the four
+    // q137 notices arrive in 2 micro-batches — a real compliance feed
     // files opt-outs continuously — accumulating append-only and
     // (kind, value)-idempotently into a rules TABLE; a whole-feed
     // replay absorb must file ZERO rules (required in-entry), and the
@@ -5786,7 +5544,6 @@ object SparkEntry {
     // VERBATIM — streamed arrival must not change one removal.
     "q141_takedown_stream" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val allRules = Seq(
         ("url", "https://www.site7.example.com/dir/page7.html?utm_source=x"),
         ("host", "www.site3.example.com"),
@@ -5794,18 +5551,10 @@ object SparkEntry {
         ("prefix", "https://www.site5.example.com/dir/page1"))
       val tbl = s"graft_q141_rules_${docsTag(s, dir)}"
       if (!s.catalog.tableExists(tbl)) {
-        val mem = org.apache.spark.sql.execution.streaming.runtime
-          .MemoryStream[(String, String)]
-        val ckpt = graft.sources.Scratch
-          .dir("graft_q141_ckpt").toString
-        val q = graft.streaming.Maintenance.streamingTakedowns(
-          mem.toDF().toDF("kind", "value"), "kind", "value", tbl, ckpt)
-        try {
-          allRules.grouped(2).foreach { chunk =>
-            mem.addData(chunk: _*)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
+        streamRows(s, allRules) { (in, ckpt) =>
+          graft.streaming.Maintenance.streamingTakedowns(
+            in.toDF("kind", "value"), "kind", "value", tbl, ckpt)
+        }
       }
       val replayed = graft.operators.Corpus.appendToTakedownTable(s,
         allRules.toDF("kind", "value"), tbl)
@@ -5865,31 +5614,17 @@ object SparkEntry {
     // must not change one byte.
     "q133_wet_stream" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val root = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_q133_wet_${docsTag(s, dir)}").toString
-      val done = new java.io.File(root, "_graft_done")
-      if (!done.exists()) {
+      val root = ensureDerivedDir(s, dir, "q133_wet") { stage =>
         val docs = t(s, dir, "documents").select(
             concat(lit("https://site"),
               pmod(col("doc_id"), lit(20)).cast("string"),
               lit(".example.com/doc"), col("doc_id").cast("string")).as("uri"),
             col("text"))
           .as[(String, String)].collect().sortBy(_._1)
-        val mem = org.apache.spark.sql.execution.streaming.runtime
-          .MemoryStream[(String, String)]
-        val ckpt = graft.sources.Scratch
-          .dir("graft_q133_ckpt").toString
-        val q = graft.streaming.Maintenance.streamingTextSegments(
-          mem.toDF().toDF("uri", "text"), "uri", "text", root, ckpt)
-        try {
-          docs.grouped(math.max(1, docs.length / 3 + 1)).foreach { chunk =>
-            mem.addData(chunk.toSeq: _*)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
-        java.nio.file.Files.createFile(done.toPath)
-        ()
+        streamRows(s, docs) { (in, ckpt) =>
+          graft.streaming.Maintenance.streamingTextSegments(
+            in.toDF("uri", "text"), "uri", "text", stage, ckpt)
+        }
       }
       val audited = graft.sources.Warc.auditAllTextSegments(s, root)
         .filter(!col("ok")).count()

@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -126,14 +127,12 @@ object Lake {
     * paths; empty month/year parents are pruned afterwards. */
   def dropOldPartitions(spark: SparkSession, path: String, retainDays: Int,
                         today: java.time.LocalDate): Seq[String] = {
-    import org.apache.hadoop.fs.Path
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(root)) return Nil
     val cutoff = today.minusDays(retainDays.toLong)
     val dropped = Seq.newBuilder[String]
-    def kids(p: Path, prefix: String) =
-      fs.listStatus(p).filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
+    def kids(p: Path, prefix: String) = subdirs(fs, p, prefix)
     for (y <- kids(root, "year="); m <- kids(y.getPath, "month=");
          d <- kids(m.getPath, "day=")) {
       try {
@@ -192,19 +191,16 @@ object Lake {
               format: String = "json", targetBytes: Long = 128L << 20,
               maxFilesPerPartition: Int = 4,
               closedOnly: String => Boolean = _ => true): Seq[String] = {
-    import org.apache.hadoop.fs.Path
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(root)) return Nil
-    def kids(p: Path, prefix: String) =
-      fs.listStatus(p).filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
+    def kids(p: Path, prefix: String) = subdirs(fs, p, prefix)
     val done = Seq.newBuilder[String]
     for (y <- kids(root, "year="); m <- kids(y.getPath, "month=");
          d <- kids(m.getPath, "day="); h <- kids(d.getPath, "hour=")) {
       val dir = h.getPath
       val rel = s"${y.getPath.getName}/${m.getPath.getName}/${d.getPath.getName}/${h.getPath.getName}"
-      val files = fs.listStatus(dir).filter(s => s.isFile &&
-        !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
+      val files = Warehouse.visibleFiles(fs, dir)
       if (files.length > maxFilesPerPartition && closedOnly(rel)) {
         val tmp = new Path(dir.getParent, s".${dir.getName}_compact_tmp")
         val old = new Path(dir.getParent, s".${dir.getName}_compact_old")
@@ -246,17 +242,7 @@ object Lake {
         require(actual == expected,
           s"compaction of $rel would alter content " +
             s"(count,crc $actual != $expected); aborting before swap")
-        def mv(src: Path, dst: Path): Unit = require(fs.rename(src, dst),
-          s"rename $src -> $dst failed; $rel left in its recovery dirs, no data deleted")
-        // move originals aside (hidden from readers), bring the
-        // compacted files in, and only then drop the originals
-        fs.mkdirs(old)
-        files.foreach(f => mv(f.getPath, new Path(old, f.getPath.getName)))
-        fs.listStatus(tmp).filter(_.isFile)
-          .filterNot(s => s.getPath.getName.startsWith("_") ||
-            s.getPath.getName.startsWith("."))
-          .foreach(f => mv(f.getPath, new Path(dir, f.getPath.getName)))
-        fs.delete(old, true)
+        swapIn(fs, dir, tmp, old, rel)
         fs.delete(tmp, true)
         done += rel
       }
@@ -304,7 +290,6 @@ object Lake {
   def upsert(spark: SparkSession, path: String, updates: DataFrame,
              keyCols: Seq[String], partitionCol: String,
              versionCol: String): Seq[String] = {
-    import org.apache.hadoop.fs.Path
     import org.apache.spark.sql.expressions.Window
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
@@ -353,23 +338,8 @@ object Lake {
       val leafName = leafNameOf(p)
       val stagedLeaf = new Path(stage, leafName)
       if (fs.exists(stagedLeaf)) {
-        val leaf = new Path(root, leafName)
-        val old = new Path(root, s".${leafName}_upsert_old")
-        require(!fs.exists(old),
-          s"$old left by an interrupted upsert; restore or remove it manually first")
-        def mv(src: Path, dst: Path): Unit = require(fs.rename(src, dst),
-          s"rename $src -> $dst failed; $leafName left in recovery dirs, no data deleted")
-        val existing = if (fs.exists(leaf))
-          fs.listStatus(leaf).filter(s => s.isFile &&
-            !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
-        else { fs.mkdirs(leaf); Array.empty[org.apache.hadoop.fs.FileStatus] }
-        fs.mkdirs(old)
-        existing.foreach(f => mv(f.getPath, new Path(old, f.getPath.getName)))
-        fs.listStatus(stagedLeaf).filter(_.isFile)
-          .filterNot(s => s.getPath.getName.startsWith("_") ||
-            s.getPath.getName.startsWith("."))
-          .foreach(f => mv(f.getPath, new Path(leaf, f.getPath.getName)))
-        fs.delete(old, true)
+        swapIn(fs, new Path(root, leafName), stagedLeaf,
+          new Path(root, s".${leafName}_upsert_old"), leafName)
         done += p
       }
     }
@@ -392,6 +362,29 @@ object Lake {
       graft.operators.Layout.refreshManifestDirs(spark, path,
         doneParts.map(p => new Path(root, leafNameOf(p)).toString))
     doneParts
+  }
+
+  private def subdirs(fs: FileSystem, p: Path, prefix: String) =
+    fs.listStatus(p).filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
+
+  /** The never-delete-first partition swap [[compact]] and [[upsert]]
+    * share: `leaf`'s visible files move aside into the hidden `old`
+    * dir, `staged`'s visible files rename in (every result checked),
+    * and only then is `old` dropped. A leftover `old` from an
+    * interrupted swap is refused, never cleaned up blind. */
+  private def swapIn(fs: FileSystem, leaf: Path, staged: Path, old: Path,
+                     rel: String): Unit = {
+    require(!fs.exists(old),
+      s"$old left by an interrupted swap of $rel; restore or remove it manually first")
+    def mv(src: Path, dst: Path): Unit = require(fs.rename(src, dst),
+      s"rename $src -> $dst failed; $rel left in its recovery dirs, no data deleted")
+    val existing = if (fs.exists(leaf)) Warehouse.visibleFiles(fs, leaf)
+      else { fs.mkdirs(leaf); Array.empty[FileStatus] }
+    fs.mkdirs(old)
+    existing.foreach(f => mv(f.getPath, new Path(old, f.getPath.getName)))
+    Warehouse.visibleFiles(fs, staged)
+      .foreach(f => mv(f.getPath, new Path(leaf, f.getPath.getName)))
+    fs.delete(old, true)
   }
 
   /** Register a bronze tree in the session catalog as a partitioned

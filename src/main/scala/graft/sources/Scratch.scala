@@ -38,7 +38,7 @@ object Scratch {
     p
   }
 
-  private def deleteRecursively(f: java.io.File): Unit = {
+  private[graft] def deleteRecursively(f: java.io.File): Unit = {
     val children = f.listFiles()
     if (children != null) children.foreach(deleteRecursively)
     f.delete(): Unit

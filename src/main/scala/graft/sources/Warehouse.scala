@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
 
@@ -19,16 +20,18 @@ object Warehouse {
     * such reader lists the files and passes them explicitly. Empty
     * when the directory does not exist. */
   def visibleFiles(spark: SparkSession, dirPath: String): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(dirPath)
+    val p = new Path(dirPath)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .filter(s => s.isFile && {
-        val n = s.getPath.getName
-        !n.startsWith("_") && !n.startsWith(".")
-      })
-      .map(_.getPath.toString).sorted
+    else visibleFiles(fs, p).toSeq.map(_.getPath.toString).sorted
   }
+
+  /** [[visibleFiles]] as statuses, on a caller's filesystem. */
+  private[sources] def visibleFiles(fs: FileSystem, dir: Path): Array[FileStatus] =
+    fs.listStatus(dir).filter(s => s.isFile && {
+      val n = s.getPath.getName
+      !n.startsWith("_") && !n.startsWith(".")
+    })
 
   /** Fail fast on qualified names: a qualified table lives at
     * `<warehouse>/<db>.db/<table>` and would dodge the orphan probe

@@ -91,6 +91,19 @@ object Maintenance {
     true
   }
 
+  /** The micro-batch loop under every `streamingX` below: a
+    * checkpointed `foreachBatch` that skips empty micro-batches and
+    * hands each non-empty one, with its batch id (the ledgered merges'
+    * replay key), to `absorb`. */
+  private def eachBatch(stream: DataFrame, checkpoint: String)(
+      absorb: (DataFrame, Long) => Unit): StreamingQuery =
+    stream.writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        if (!batch.isEmpty) absorb(batch.toDF(), batchId)
+      }
+      .start()
+
   /** Keep an hourly rollup state table continuously refreshed from a
     * stream. Query the live rollup any time with
     * `Rollup.report(spark.table(stateTable))` — after a
@@ -102,16 +115,10 @@ object Maintenance {
   def streamingRollup(stream: DataFrame, tsCol: String, valCol: String,
                       keyCols: Seq[String], stateTable: String,
                       checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val incr = Rollup.hourlyState(batch.toDF(), tsCol, valCol, keyCols)
-          refreshRollupState(batch.sparkSession, stateTable, incr, batchId)
-          ()
-        }
-      }
-      .start()
+    eachBatch(stream, checkpoint) { (batch, batchId) =>
+      val incr = Rollup.hourlyState(batch, tsCol, valCol, keyCols)
+      refreshRollupState(batch.sparkSession, stateTable, incr, batchId)
+    }
 
   /** Keep a [[graft.operators.Telemetry]] state table (per-group
     * doc/token counts + KMV distinct + Misra-Gries heavy-hitter
@@ -127,18 +134,12 @@ object Maintenance {
   def streamingTelemetry(stream: DataFrame, groupCol: String, textCol: String,
                          stateTable: String, checkpoint: String,
                          k: Int = 4096, capacity: Int = 4096): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val incr = graft.operators.Telemetry.telemetry(
-            batch.toDF(), groupCol, textCol, k, capacity)
-          refreshLedgered(batch.sparkSession, stateTable, incr, batchId)(
-            graft.operators.Telemetry.merge(_, _, groupCol, k, capacity))
-          ()
-        }
-      }
-      .start()
+    eachBatch(stream, checkpoint) { (batch, batchId) =>
+      val incr = graft.operators.Telemetry.telemetry(
+        batch, groupCol, textCol, k, capacity)
+      refreshLedgered(batch.sparkSession, stateTable, incr, batchId)(
+        graft.operators.Telemetry.merge(_, _, groupCol, k, capacity))
+    }
 
   /** Keep per-group hashed-gram bucket counts
     * ([[graft.operators.Dsir.bucketCountsBy]]) continuously merged
@@ -154,27 +155,21 @@ object Maintenance {
   def streamingDriftCounts(stream: DataFrame, groupCol: String,
                            textCol: String, stateTable: String,
                            checkpoint: String, dim: Int = 4096): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val incr = graft.operators.Dsir.bucketCountsBy(
-            batch.toDF(), groupCol, textCol, dim)
-          refreshLedgered(batch.sparkSession, stateTable, incr, batchId) {
-            (st, inc) =>
-              val s2 = st.select(col(groupCol), col("bucket"),
-                col("cnt").as("__sc"))
-              val i2 = inc.select(col(groupCol), col("bucket"),
-                col("cnt").as("__ic"))
-              s2.join(i2, Seq(groupCol, "bucket"), "full_outer")
-                .select(col(groupCol), col("bucket"),
-                  (coalesce(col("__sc"), lit(0L)) +
-                    coalesce(col("__ic"), lit(0L))).as("cnt"))
-          }
-          ()
-        }
+    eachBatch(stream, checkpoint) { (batch, batchId) =>
+      val incr = graft.operators.Dsir.bucketCountsBy(
+        batch, groupCol, textCol, dim)
+      refreshLedgered(batch.sparkSession, stateTable, incr, batchId) {
+        (st, inc) =>
+          val s2 = st.select(col(groupCol), col("bucket"),
+            col("cnt").as("__sc"))
+          val i2 = inc.select(col(groupCol), col("bucket"),
+            col("cnt").as("__ic"))
+          s2.join(i2, Seq(groupCol, "bucket"), "full_outer")
+            .select(col(groupCol), col("bucket"),
+              (coalesce(col("__sc"), lit(0L)) +
+                coalesce(col("__ic"), lit(0L))).as("cnt"))
       }
-      .start()
+    }
 
   /** Absorb one document batch into the streamed bigram-LM model
     * state: the (w1, w2, cnt) table merges ADDITIVELY (counts are not
@@ -234,16 +229,10 @@ object Maintenance {
   def streamingBigramModel(stream: DataFrame, idCol: String, textCol: String,
                            bigramsTable: String, tokensTable: String,
                            checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          absorbBigramBatch(batch.sparkSession, batch.toDF(), idCol, textCol,
-            bigramsTable, tokensTable, batchId)
-          ()
-        }
-      }
-      .start()
+    eachBatch(stream, checkpoint) { (batch, batchId) =>
+      absorbBigramBatch(batch.sparkSession, batch, idCol, textCol,
+        bigramsTable, tokensTable, batchId)
+    }
 
   /** Keep a persisted MinHash sketch table
     * ([[graft.operators.Dedup.appendToSketchTable]]) continuously
@@ -260,16 +249,10 @@ object Maintenance {
                                checkpoint: String,
                                numHashes: Int = 128, bands: Int = 16,
                                shingleK: Int = 5): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        if (!batch.isEmpty) {
-          graft.operators.Dedup.appendToSketchTable(batch.sparkSession,
-            batch.toDF(), idCol, textCol, table, numHashes, bands, shingleK)
-          ()
-        }
-      }
-      .start()
+    eachBatch(stream, checkpoint) { (batch, _) =>
+      graft.operators.Dedup.appendToSketchTable(batch.sparkSession,
+        batch, idCol, textCol, table, numHashes, bands, shingleK)
+    }
 
   /** Keep an incremental n-gram near-dup index
     * ([[graft.operators.Dedup.ensureNgramIndexIncr]]) continuously
@@ -296,19 +279,13 @@ object Maintenance {
                           tbl: graft.operators.Dedup.NgramIncrTables,
                           checkpoint: String,
                           n: Int = 3, threshold: Double = 0.5): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          graft.operators.Dedup.ensureNgramIndexIncr(
-            spark, batch.toDF(), idCol, textCol, tbl, n, threshold)
-          graft.operators.Dedup.appendToNgramIndex(
-            spark, batch.toDF(), idCol, textCol, tbl, n, threshold)
-          ()
-        }
-      }
-      .start()
+    eachBatch(stream, checkpoint) { (batch, _) =>
+      val spark = batch.sparkSession
+      graft.operators.Dedup.ensureNgramIndexIncr(
+        spark, batch, idCol, textCol, tbl, n, threshold)
+      graft.operators.Dedup.appendToNgramIndex(
+        spark, batch, idCol, textCol, tbl, n, threshold)
+    }
 
   /** Keep a persisted IVFADC code table continuously absorbed from a
     * vector stream — the last index family to get the streaming leg
@@ -332,21 +309,15 @@ object Maintenance {
                           indexTable: String, centroidTable: String,
                           codebookTable: String,
                           checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val cm = graft.operators.Similarity
-            .centroidsFromDF(spark.table(centroidTable))
-          val model = graft.operators.Similarity
-            .pqModelFromDF(spark.table(codebookTable))
-          graft.operators.Similarity.appendToIvfPqIndex(spark,
-            batch.toDF(), idCol, vecCol, indexTable, cm, model)
-          ()
-        }
-      }
-      .start()
+    eachBatch(stream, checkpoint) { (batch, _) =>
+      val spark = batch.sparkSession
+      val cm = graft.operators.Similarity
+        .centroidsFromDF(spark.table(centroidTable))
+      val model = graft.operators.Similarity
+        .pqModelFromDF(spark.table(codebookTable))
+      graft.operators.Similarity.appendToIvfPqIndex(spark,
+        batch, idCol, vecCol, indexTable, cm, model)
+    }
 
   /** Keep a persisted crawl-frontier table
     * ([[graft.operators.Frontier.appendToFrontierTable]]) continuously
@@ -362,16 +333,10 @@ object Maintenance {
   def streamingFrontier(stream: DataFrame, urlCol: String,
                         scoreCol: String, table: String,
                         checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        if (!batch.isEmpty) {
-          graft.operators.Frontier.appendToFrontierTable(
-            batch.sparkSession, batch.toDF(), urlCol, scoreCol, table)
-          ()
-        }
-      }
-      .start()
+    eachBatch(stream, checkpoint) { (batch, _) =>
+      graft.operators.Frontier.appendToFrontierTable(
+        batch.sparkSession, batch, urlCol, scoreCol, table)
+    }
 
   /** Keep a persisted CDX capture catalog
     * ([[graft.sources.Warc.appendToCdxTable]]) continuously absorbed
@@ -388,21 +353,15 @@ object Maintenance {
     * (battery q138 pins it against the q136 oracle verbatim). */
   def streamingCdx(stream: DataFrame, pathCol: String, table: String,
                    checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        if (!batch.isEmpty) {
-          val paths = batch.select(pathCol).distinct()
-            .collect().map(_.getString(0)) // |segments|-bounded
-          // ONE absorb for the whole micro-batch — one skip-set read,
-          // one index job, one append; per-path absorbs would rescan
-          // the growing catalog once per announced path
-          graft.sources.Warc.appendToCdxTable(batch.sparkSession, table,
-            paths.sorted.toSeq)
-          ()
-        }
-      }
-      .start()
+    eachBatch(stream, checkpoint) { (batch, _) =>
+      val paths = batch.select(pathCol).distinct()
+        .collect().map(_.getString(0)) // |segments|-bounded
+      // ONE absorb for the whole micro-batch — one skip-set read,
+      // one index job, one append; per-path absorbs would rescan
+      // the growing catalog once per announced path
+      graft.sources.Warc.appendToCdxTable(batch.sparkSession, table,
+        paths.sorted.toSeq)
+    }
 
   /** Keep a persisted takedown-rules table
     * ([[graft.operators.Corpus.appendToTakedownTable]]) continuously
@@ -411,22 +370,16 @@ object Maintenance {
     * and (kind, value)-idempotently, and the corpus re-purges
     * against `spark.table(table)` with
     * [[graft.operators.Corpus.applyTakedowns]] whenever it ships
-    * (battery q141 streams the q137 rule set in 3 batches and
+    * (battery q141 streams the q137 rule set in 2 batches and
     * answers the q137 oracle verbatim). */
   def streamingTakedowns(stream: DataFrame, kindCol: String,
                          valueCol: String, table: String,
                          checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        if (!batch.isEmpty) {
-          graft.operators.Corpus.appendToTakedownTable(batch.sparkSession,
-            batch.select(col(kindCol).as("kind"), col(valueCol).as("value")),
-            table)
-          ()
-        }
-      }
-      .start()
+    eachBatch(stream, checkpoint) { (batch, _) =>
+      graft.operators.Corpus.appendToTakedownTable(batch.sparkSession,
+        batch.select(col(kindCol).as("kind"), col(valueCol).as("value")),
+        table)
+    }
 
   /** Keep the streaming BM25 pair
     * ([[graft.operators.Retrieval.appendToBm25Tables]]) continuously
@@ -441,17 +394,11 @@ object Maintenance {
   def streamingBm25(stream: DataFrame, idCol: String, textCol: String,
                     statsTable: String, dlTable: String,
                     checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        if (!batch.isEmpty) {
-          graft.operators.Retrieval.appendToBm25Tables(
-            batch.sparkSession, batch.toDF(), idCol, textCol,
-            statsTable, dlTable)
-          ()
-        }
-      }
-      .start()
+    eachBatch(stream, checkpoint) { (batch, _) =>
+      graft.operators.Retrieval.appendToBm25Tables(
+        batch.sparkSession, batch, idCol, textCol,
+        statsTable, dlTable)
+    }
 
   /** Merge one micro-batch of raw `(src, dst)` link pairs into a
     * [[graft.operators.Graph.ensureEdgeTable]]-shaped edge table,
@@ -487,16 +434,10 @@ object Maintenance {
   def streamingGraphEdges(stream: DataFrame, srcCol: String, dstCol: String,
                           table: String, checkpoint: String,
                           buckets: Int = 32): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          refreshGraphEdges(batch.sparkSession, table, batch.toDF(),
-            srcCol, dstCol, batchId, buckets)
-          ()
-        }
-      }
-      .start()
+    eachBatch(stream, checkpoint) { (batch, batchId) =>
+      refreshGraphEdges(batch.sparkSession, table, batch,
+        srcCol, dstCol, batchId, buckets)
+    }
 
   /** Keep a WET interchange archive continuously written from a
     * refined-text stream — the streaming half of the q123 export sink
@@ -514,16 +455,10 @@ object Maintenance {
   def streamingTextSegments(stream: DataFrame, uriCol: String,
                             textCol: String, root: String,
                             checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.sources.Warc.writeTextSegments(
-            batch.toDF(), uriCol, textCol, s"$root/batch-$batchId")
-          ()
-        }
-      }
-      .start()
+    eachBatch(stream, checkpoint) { (batch, batchId) =>
+      graft.sources.Warc.writeTextSegments(
+        batch, uriCol, textCol, s"$root/batch-$batchId")
+    }
 
   /** The WAT sibling of [[streamingTextSegments]]: keep a streaming
     * WAT metadata archive — one `batch-<id>` subtree of
@@ -537,16 +472,10 @@ object Maintenance {
   def streamingWatSegments(stream: DataFrame, uriCol: String,
                            jsonCol: String, root: String,
                            checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.sources.Warc.writeWatSegments(
-            batch.toDF(), uriCol, jsonCol, s"$root/batch-$batchId")
-          ()
-        }
-      }
-      .start()
+    eachBatch(stream, checkpoint) { (batch, batchId) =>
+      graft.sources.Warc.writeWatSegments(
+        batch, uriCol, jsonCol, s"$root/batch-$batchId")
+    }
 
   /** Keep a standing anchor-postings table continuously absorbed from
     * a PAGE stream — the anchor family's streaming-maintenance leg
@@ -562,17 +491,11 @@ object Maintenance {
   def streamingAnchorEdges(stream: DataFrame, idCol: String,
                            urlCol: String, htmlCol: String,
                            table: String, checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        if (!batch.isEmpty) {
-          graft.operators.Html.appendToAnchorTable(
-            batch.sparkSession, batch.toDF(), idCol, urlCol, htmlCol,
-            table)
-          ()
-        }
-      }
-      .start()
+    eachBatch(stream, checkpoint) { (batch, _) =>
+      graft.operators.Html.appendToAnchorTable(
+        batch.sparkSession, batch, idCol, urlCol, htmlCol,
+        table)
+    }
 
   /** Keep a persisted component catalog
     * ([[graft.operators.Components.appendToComponentsTable]])
@@ -588,16 +511,10 @@ object Maintenance {
     * pins streamed == from-scratch clustering). */
   def streamingComponents(stream: DataFrame, aCol: String, bCol: String,
                           table: String, checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        if (!batch.isEmpty) {
-          graft.operators.Components.appendToComponentsTable(
-            batch.sparkSession, batch.toDF(), aCol, bCol, table)
-          ()
-        }
-      }
-      .start()
+    eachBatch(stream, checkpoint) { (batch, _) =>
+      graft.operators.Components.appendToComponentsTable(
+        batch.sparkSession, batch, aCol, bCol, table)
+    }
 
   /** Continuously MERGE a stream of updates into a partitioned lake
     * tree (CDC apply). Replay-safe without bookkeeping: Lake.upsert
@@ -606,14 +523,8 @@ object Maintenance {
   def streamingUpsert(stream: DataFrame, path: String, keyCols: Seq[String],
                       partitionCol: String, versionCol: String,
                       checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        if (!batch.isEmpty) {
-          Lake.upsert(batch.sparkSession, path, batch.toDF(),
-            keyCols, partitionCol, versionCol)
-          ()
-        }
-      }
-      .start()
+    eachBatch(stream, checkpoint) { (batch, _) =>
+      Lake.upsert(batch.sparkSession, path, batch,
+        keyCols, partitionCol, versionCol)
+    }
 }

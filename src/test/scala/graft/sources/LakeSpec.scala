@@ -277,6 +277,26 @@ class LakeSpec extends SparkSpec {
     assert(e.getMessage.contains("interrupted upsert"))
   }
 
+  test("compaction refuses a partition with swap leftovers instead of cleaning them blind") {
+    val dir = tmp()
+    val fallback = to_timestamp(lit("1999-01-01 00:00:00"))
+    (0 until 3).foreach { _ =>
+      Lake.writeBronze(Generator.airQuality(spark, 12), dir, "json", fallback)
+    }
+    def down(f: java.io.File): java.io.File =
+      f.listFiles().filter(_.isDirectory).headOption.map(down).getOrElse(f)
+    val leaf = down(new java.io.File(dir))
+    def names = leaf.listFiles().map(_.getName).sorted.toSeq
+    val before = names
+    assert(before.count(n => !n.startsWith(".") && !n.startsWith("_")) >= 3)
+    val old = new java.io.File(leaf.getParentFile, s".${leaf.getName}_compact_old")
+    assert(old.mkdirs())
+    val e = intercept[IllegalArgumentException](
+      Lake.compact(spark, dir, Schemas.airQuality, maxFilesPerPartition = 1))
+    assert(e.getMessage.contains("recovery leftovers"))
+    assert(old.isDirectory && names == before, "the refused partition was touched")
+  }
+
   test("map-typed vehicle breakdown merges via City.mergeMapCounts (A9)") {
     val p = Generator.parking(spark, 30)
       .select(col("data.parking_lot_id").as("lot"),
