@@ -37,7 +37,9 @@ object MultimodalDemo {
   /** Run the slice: synthesize media rows off the `documents` ids in
     * `sfDir` (every `cloneEvery`-th id gets a perceptual near-clone at
     * id+10_000_000), dedup both modalities, export survivors' metadata
-    * sharded under `outDir`, and audit the export. */
+    * sharded under `outDir/media` (the image-text pairs under
+    * `outDir/pairs`, the interleaved docs under `outDir/interleaved`),
+    * and audit each export. */
   def run(spark: SparkSession, sfDir: String, outDir: String,
           cloneEvery: Int = 10, shards: Int = 8): Result = {
     import spark.implicits._
@@ -98,8 +100,9 @@ object MultimodalDemo {
     val survivors = kept.count()
 
     // 4. audited export of the surviving media metadata
-    Sampling.writeShardedWithManifest(kept, "media_id", shards, outDir)
-    val auditOk = Sampling.verifyShardedExport(spark, outDir, "media_id")
+    val mediaDir = s"$outDir/media"
+    Sampling.writeShardedWithManifest(kept, "media_id", shards, mediaDir)
+    val auditOk = Sampling.verifyShardedExport(spark, mediaDir, "media_id")
       .filter(!col("ok")).isEmpty
 
     // 5. the LAION leg: synthesized pages EMBED the image media as
@@ -129,7 +132,7 @@ object MultimodalDemo {
       .cache()
     val imagePairs = pairRows.count()
     val pairsKept = pairRows.join(kept.select("media_id"), Seq("media_id"))
-    val pairsDir = outDir + "_pairs"
+    val pairsDir = s"$outDir/pairs"
     Sampling.writeShardedWithManifest(pairsKept, "media_id", shards,
       pairsDir)
     val pairSurvivors = pairsKept.count()
@@ -164,7 +167,7 @@ object MultimodalDemo {
       .cache()
     val interleavedDocs = interRows.count()
     val interKept = interRows.join(kept.select("media_id"), Seq("media_id"))
-    val interDir = outDir + "_interleaved"
+    val interDir = s"$outDir/interleaved"
     Sampling.writeShardedWithManifest(interKept, "media_id", shards,
       interDir)
     val interleavedKept = interKept.count()

@@ -15,7 +15,7 @@ import graft.sources.{Lake, TopicStream}
   *
   *   generator → topic dir (the Kafka-wire surface, S6)
   *     → bronze JSONL lake with event-time partitions (S7/W1/W6)
-  *     → catalog table + MSCK partition discovery (S12)
+  *     → catalog table synced to the lake's partition dirs (S12)
   *     → batch analytics: casts, congestion, zone/road aggs (P1/P2/A1-A5)
   *     → processed parquet partitioned by zone (S2)
   *     → `hourly_traffic_stats` warehouse table (A7)
@@ -59,7 +59,8 @@ object PipelineDemo {
         lakeBase, fallbackTs, s"$base/ckpt", Trigger.AvailableNow())
       .awaitTermination()
 
-    // 3. catalog: external table over the bronze tree + MSCK (S12)
+    // 3. catalog: external table over the bronze tree, its partitions
+    //    synced to the hour dirs on disk (S12)
     Lake.registerTable(spark, "bronze_traffic", s"$lakeBase/traffic",
       Schemas.trafficEvent)
     val bronzeRows = spark.table("bronze_traffic").count()

@@ -15,17 +15,23 @@ import graft.sources.LocalFs
   *    (`:111-113` selects a column that doesn't exist) is fixed
   *  - groupBy on raw `timestamp` (near-per-record groups) kept for
   *    parity; windowed variant is the sane default for real data
+  *  - an unparseable `event_time` gives a null `timestamp`, as the
+  *    reference's P1 cast does (`traffic_batch_processing.py:50-59`);
+  *    the collectors' wall-clock fallback (F8) is not applied here, so
+  *    a malformed row rolls up the same whenever the job runs
   */
 object TrafficBatchJob {
 
-  /** P1 casts + P2 congestion derivation. */
+  /** P1 casts + P2 congestion derivation. The plan holds no per-query
+    * literal (a folded wall-clock fallback would be one), so a repeated
+    * run reuses the generated code of the one before. */
   def transform(raw: DataFrame): DataFrame =
     raw.select(
       col("sensor_id"), col("road_id"), col("road_type"), col("zone"),
       col("vehicle_count").cast("int").as("vehicle_count"),
       col("average_speed").cast("float").as("average_speed"),
       col("occupancy_rate").cast("float").as("occupancy_rate"),
-      City.parseIsoTs(col("event_time")).as("timestamp"))
+      City.parseIsoTs(col("event_time"), lit(null).cast("timestamp")).as("timestamp"))
       .withColumn("congestion_level", City.congestionOccupancy(col("occupancy_rate")))
 
   /** A1: zone aggregation (hash agg w/ partial map-side combine). */

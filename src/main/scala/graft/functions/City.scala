@@ -94,7 +94,11 @@ object City {
 
   /** ISO-8601 parse with Z→+00:00 normalization and an injectable fallback
     * (the reference falls back to wall clock; tests inject a fixed instant
-    * so partition keys stay deterministic). */
+    * so partition keys stay deterministic). The `current_timestamp()`
+    * default is folded into a new constant on every query, and Spark
+    * inlines that constant into the generated code, so each query
+    * recompiles; a hot path should pass a fixed fallback (or a null
+    * one). */
   def parseIsoTs(c: Column, fallback: Column = current_timestamp()): Column =
     coalesce(try_to_timestamp(regexp_replace(c, "Z$", "+00:00")), fallback)
 

@@ -18,10 +18,15 @@ import graft.functions.City
   */
 object Lake {
 
+  /** The event-time partition columns, outermost first. */
+  private val PartitionKeys = Seq("year", "month", "day", "hour")
+
   /** Event time for a lake record: nested `data.timestamp` (envelope)
     * first, top-level `timestamp` second, flat `event_time` (the
     * traffic-analytics row shape) third — whichever exist in the
-    * schema — then the injectable fallback. */
+    * schema — then the injectable fallback. The `current_timestamp()`
+    * default becomes a new constant in the generated code of every
+    * query, forcing a recompile (see [[City.parseIsoTs]]). */
   def eventTime(df: DataFrame, fallback: Column = current_timestamp()): Column = {
     val names = df.schema.fieldNames.toSet
     val hasNested = df.schema.fields.exists(f => f.name == "data" &&
@@ -41,7 +46,11 @@ object Lake {
     df.select(col("*") +: City.partitionCols(eventTime(df, fallback)): _*)
 
   /** Write a bronze partition tree. `format` "json" mirrors the
-    * reference's JSONL lake; "parquet" is the scale-path default. */
+    * reference's JSONL lake; "parquet" is the scale-path default. The
+    * `current_timestamp()` fallback is the collectors' wall-clock rule,
+    * and it costs a codegen recompile on every write (micro-batch); a
+    * hot path that can do without wall-clock semantics should pass a
+    * fixed fallback. */
   def writeBronze(df: DataFrame, path: String, format: String = "json",
                   fallback: Column = current_timestamp()): Unit = {
     LocalFs.bind(df.sparkSession)
@@ -54,10 +63,7 @@ object Lake {
   def readBronze(spark: SparkSession, path: String, schema: StructType,
                  format: String = "json"): DataFrame = {
     LocalFs.bind(spark)
-    val partitioned = new StructType(
-      (schema.fields ++ new StructType()
-        .add("year", "string").add("month", "string")
-        .add("day", "string").add("hour", "string").fields))
+    val partitioned = PartitionKeys.foldLeft(schema)(_.add(_, "string"))
     spark.read.schema(partitioned).format(format)
       .option("basePath", path).load(path)
   }
@@ -194,12 +200,9 @@ object Lake {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(root)) return Nil
-    def kids(p: Path, prefix: String) = subdirs(fs, p, prefix)
     val done = Seq.newBuilder[String]
-    for (y <- kids(root, "year="); m <- kids(y.getPath, "month=");
-         d <- kids(m.getPath, "day="); h <- kids(d.getPath, "hour=")) {
-      val dir = h.getPath
-      val rel = s"${y.getPath.getName}/${m.getPath.getName}/${d.getPath.getName}/${h.getPath.getName}"
+    for ((names, dir) <- hourLeaves(fs, root)) {
+      val rel = names.mkString("/")
       val files = Warehouse.visibleFiles(fs, dir)
       if (files.length > maxFilesPerPartition && closedOnly(rel)) {
         val tmp = new Path(dir.getParent, s".${dir.getName}_compact_tmp")
@@ -367,6 +370,14 @@ object Lake {
   private def subdirs(fs: FileSystem, p: Path, prefix: String) =
     fs.listStatus(p).filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
 
+  /** The `year=/month=/day=/hour=` leaf dirs under `root`, each with its
+    * four `key=value` dir names — a driver-side walk of directory names
+    * only, never of file contents. */
+  private def hourLeaves(fs: FileSystem, root: Path): Seq[(Seq[String], Path)] =
+    (for (y <- subdirs(fs, root, "year="); m <- subdirs(fs, y.getPath, "month=");
+          d <- subdirs(fs, m.getPath, "day="); h <- subdirs(fs, d.getPath, "hour="))
+      yield (Seq(y, m, d, h).map(_.getPath.getName), h.getPath)).toSeq
+
   /** The never-delete-first partition swap [[compact]] and [[upsert]]
     * share: `leaf`'s visible files move aside into the hidden `old`
     * dir, `staged`'s visible files rename in (every result checked),
@@ -388,17 +399,56 @@ object Lake {
   }
 
   /** Register a bronze tree in the session catalog as a partitioned
-    * table + MSCK REPAIR to discover partitions (S12). */
+    * external table (S12), and keep it in step with the tree on every
+    * later call. The table is created only when it is missing or its
+    * definition (data schema, partition columns, format, location)
+    * differs; its partitions are then synced to the
+    * `year=/month=/day=/hour=` dirs on disk by the driver-side walk
+    * [[compact]] uses — new hour dirs are added, vanished ones dropped
+    * (their files are never touched) — and the table is refreshed, so a
+    * cached read or file listing sees files that landed since the last
+    * call. Runs no Spark job: re-registering an unchanged lake costs a
+    * directory walk and a catalog lookup, where DROP + CREATE + `MSCK
+    * REPAIR TABLE` would rebuild the table and re-discover every
+    * partition each time. */
   def registerTable(spark: SparkSession, name: String, path: String,
                     schema: StructType, format: String = "json"): Unit = {
+    import org.apache.spark.sql.catalyst.catalog.{CatalogTablePartition, ExternalCatalogUtils}
     LocalFs.bind(spark)
-    spark.sql(s"DROP TABLE IF EXISTS $name")
-    spark.sql(
-      s"""CREATE TABLE $name (${schema.toDDL},
-         |  year STRING, month STRING, day STRING, hour STRING)
-         |USING $format
-         |PARTITIONED BY (year, month, day, hour)
-         |LOCATION '$path'""".stripMargin)
-    spark.sql(s"MSCK REPAIR TABLE $name")
+    val catalog = spark.sessionState.catalog
+    val ident = spark.sessionState.sqlParser.parseTableIdentifier(name)
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val ddl = (schema.toDDL +: PartitionKeys.map(k => s"$k STRING")).mkString(", ")
+    val current = Some(ident).filter(catalog.tableExists).map(catalog.getTableMetadata)
+    if (!current.exists(t => t.provider.exists(_.equalsIgnoreCase(format)) &&
+        t.partitionColumnNames == PartitionKeys && t.schema == StructType.fromDDL(ddl) &&
+        t.storage.locationUri.contains(fs.makeQualified(root).toUri))) {
+      spark.sql(s"DROP TABLE IF EXISTS $name")
+      spark.sql(
+        s"""CREATE TABLE $name ($ddl)
+           |USING $format
+           |PARTITIONED BY (${PartitionKeys.mkString(", ")})
+           |LOCATION '$path'""".stripMargin)
+    }
+    val storage = catalog.getTableMetadata(ident).storage
+    val leaves = if (fs.exists(root)) hourLeaves(fs, root) else Nil
+    val onDisk = leaves.map { case (names, dir) =>
+      names.map { n =>
+        val (k, v) = n.splitAt(n.indexOf('='))
+        k -> ExternalCatalogUtils.unescapePathName(v.tail)
+      }.toMap -> dir
+    }.toMap
+    val listed = catalog.listPartitions(ident).map(_.spec).toSet
+    val gone = listed.filterNot(onDisk.contains).toSeq
+    if (gone.nonEmpty)
+      catalog.dropPartitions(ident, gone, ignoreIfNotExists = true,
+        purge = false, retainData = true)
+    val added = onDisk.filterNot { case (spec, _) => listed(spec) }
+    if (added.nonEmpty)
+      catalog.createPartitions(ident, added.map { case (spec, dir) =>
+        CatalogTablePartition(spec, storage.copy(locationUri = Some(dir.toUri)))
+      }.toSeq, ignoreIfExists = true)
+    spark.catalog.refreshTable(name)
   }
 }

@@ -32,14 +32,14 @@ class MultimodalDemoSpec extends SparkSpec {
     // same-texture bases, so the image share must come from the
     // export, not arithmetic on the totals)
     assert(r.imagePairs == r.images, s"pair mining drifted: $r")
-    val keptImages = spark.read.parquet(out)
+    val keptImages = spark.read.parquet(s"$out/media")
       .filter(col("format") === "png").count()
     assert(r.pairSurvivors == keptImages,
       s"pair dedup must track image survivors ($keptImages): $r")
     assert(r.pairSurvivors > 0 && r.pairSurvivors < r.imagePairs)
     assert(r.pairAuditOk, s"pair export audit failed: $r")
     // the landed pair table carries the alt and figcaption fields
-    val pairs = spark.read.parquet(out + "_pairs")
+    val pairs = spark.read.parquet(s"$out/pairs")
     assert(pairs.filter(col("alt_text").isNull ||
       col("caption").isNull).count() == 0,
       "every mined pair must carry alt and caption")
@@ -50,12 +50,12 @@ class MultimodalDemoSpec extends SparkSpec {
     // exactly one placeholder between the two kept paragraphs, the
     // kept set tracking the image survivors, and a clean audit
     assert(r.interleavedDocs == r.images, s"interleaved synthesis drifted: $r")
-    val keptImages2 = spark.read.parquet(out)
+    val keptImages2 = spark.read.parquet(s"$out/media")
       .filter(col("format") === "png").count()
     assert(r.interleavedKept == keptImages2,
       s"interleaved kept must track image survivors ($keptImages2): $r")
     assert(r.interleavedAuditOk, s"interleaved export audit failed: $r")
-    val inter = spark.read.parquet(out + "_interleaved")
+    val inter = spark.read.parquet(s"$out/interleaved")
     assert(inter.filter(col("n_images") =!= 1 || col("n_kept") =!= 2)
       .count() == 0, "every interleaved doc: 1 image, 2 kept paragraphs")
     assert(inter.filter(!col("interleaved_text")

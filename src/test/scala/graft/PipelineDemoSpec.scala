@@ -23,7 +23,7 @@ class PipelineDemoSpec extends SparkSpec {
         .listFiles().filter(_.isDirectory).map(_.getName).sorted
       assert(hours.head == "hour=14" && hours.length == 8, hours.mkString(","))
 
-      // the catalog table sees the same partitions MSCK discovered
+      // the catalog table lists the same partitions as the hour dirs
       assert(spark.table("bronze_traffic")
         .select("year", "month", "day", "hour").distinct().count() == 8)
 

@@ -25,6 +25,35 @@ class TrafficBatchJobSpec extends SparkSpec {
     assert(traffic.count() == 400)
   }
 
+  test("a repeated transform -> hourly rollup reuses its generated code") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    def once() = TrafficBatchJob.hourlyStats(TrafficBatchJob.transform(raw)).collect()
+    val first = once()
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val second = once()
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles == 0,
+      "the second run compiled new code")
+    assert(second.map(_.toString).sorted.sameElements(first.map(_.toString).sorted))
+  }
+
+  test("a malformed event_time gives a null timestamp, the same on every run") {
+    val bad = raw.withColumn("event_time",
+      when(col("road_id") === "R0", lit("not a time")).otherwise(col("event_time")))
+    def once() = {
+      val t = TrafficBatchJob.transform(bad)
+      (t.collect().map(_.toString).sorted, TrafficBatchJob.hourlyStats(t).collect().map(_.toString).sorted)
+    }
+    val t = TrafficBatchJob.transform(bad)
+    val nulls = t.filter(col("timestamp").isNull)
+    assert(nulls.count() == 16 && nulls.filter(col("road_id") =!= "R0").isEmpty) // 400 rows over 25 roads
+    assert(t.filter(col("timestamp").isNotNull).count() == 400 - 16)
+    val (rows1, hourly1) = once()
+    Thread.sleep(20)
+    val (rows2, hourly2) = once()
+    assert(rows1.sameElements(rows2) && hourly1.sameElements(hourly2))
+    assert(hourly1.exists(_.contains(",null,")), "malformed rows roll up under a null hour")
+  }
+
   test("zone analytics: totals reconcile with input") {
     val za = TrafficBatchJob.zoneAnalytics(traffic)
     val fromAgg = za.agg(sum("total_vehicles")).collect().head.getLong(0)

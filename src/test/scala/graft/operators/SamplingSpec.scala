@@ -439,7 +439,7 @@ class SamplingSpec extends SparkSpec {
       .orderBy("id").limit(1).select("id").as[Long].head()
     val rest = all.filter(col("shard") === victim && col("id") =!= trimmed)
       .drop("shard")
-    val tmp = dir + "_rewrite"
+    val tmp = graft.sources.Scratch.dir("graft_export_rewrite").toString
     rest.write.mode("overwrite").parquet(tmp)
     val sdir = new java.io.File(s"$dir/shard=$victim")
     sdir.listFiles().filter(_.getName.endsWith(".parquet")).foreach(_.delete())

@@ -5,6 +5,7 @@ import graft.generator.Generator
 import graft.schemas.Schemas
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 class LakeSpec extends SparkSpec {
 
@@ -60,6 +61,136 @@ class LakeSpec extends SparkSpec {
     assert(byLevel.map(_.getString(0)).toSet.subsetOf(Set("high", "medium", "low")))
     assert(byLevel.map(_.getLong(1)).sum == 40)
     spark.sql("DROP TABLE bronze_traffic_edges")
+  }
+
+  private val regFallback = to_timestamp(lit("1999-01-01 00:00:00"))
+
+  private def partitions(table: String): Set[String] =
+    spark.sql(s"SHOW PARTITIONS $table").collect().map(_.getString(0)).toSet
+
+  private def rows(table: String): Long =
+    spark.sql(s"SELECT count(1) FROM $table").collect().head.getLong(0)
+
+  /** A table property that survives exactly as long as the table does:
+    * re-registration that keeps the table keeps it, one that redefines
+    * the table drops it. */
+  private def probe(table: String): Option[String] = {
+    val catalog = spark.sessionState.catalog
+    catalog.getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier(table))
+      .properties.get("probe")
+  }
+
+  /** Spark jobs that `body` starts on this thread, seen by a listener.
+    * The bus delivers events in order, so once a marker job run after
+    * `body` has been seen, every job of `body` has been too. */
+  private def jobsIn(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val tag = s"lakespec-${java.util.UUID.randomUUID}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties).flatMap(p => Option(p.getProperty("lakespec.tag"))).getOrElse(""))
+    }
+    def tagged[T](t: String)(f: => T): T = {
+      sc.setLocalProperty("lakespec.tag", t)
+      try f finally sc.setLocalProperty("lakespec.tag", null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      tagged(tag)(body)
+      tagged(s"$tag-marker")(sc.parallelize(Seq(1), 1).count())
+      val deadline = System.nanoTime + 30L * 1000 * 1000 * 1000
+      while (!seen.contains(s"$tag-marker") && System.nanoTime < deadline) Thread.sleep(5)
+      assert(seen.contains(s"$tag-marker"), "listener never saw the marker job")
+      seen.toArray.count(_ == tag)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("re-registering an unchanged lake keeps table and partitions and runs no Spark job") {
+    val dir = tmp()
+    Lake.writeBronze(Generator.trafficEvents(spark, 64), dir, "json", regFallback)
+    try {
+      Lake.registerTable(spark, "bronze_reg_same", dir, Schemas.trafficEvent)
+      val before = partitions("bronze_reg_same")
+      assert(before.size == 8, before)
+      spark.sql("ALTER TABLE bronze_reg_same SET TBLPROPERTIES ('probe' = 'kept')")
+      val jobs = jobsIn(Lake.registerTable(spark, "bronze_reg_same", dir, Schemas.trafficEvent))
+      assert(jobs == 0, s"re-registration ran $jobs Spark jobs")
+      assert(partitions("bronze_reg_same") == before)
+      assert(probe("bronze_reg_same").contains("kept"), "an unchanged table was recreated")
+      assert(rows("bronze_reg_same") == 64)
+    } finally spark.sql("DROP TABLE IF EXISTS bronze_reg_same")
+  }
+
+  test("re-registering adds a new hour dir and drops a deleted one") {
+    val dir = tmp()
+    val events = Generator.trafficEvents(spark, 64)
+    Lake.writeBronze(events, dir, "json", regFallback)
+    try {
+      Lake.registerTable(spark, "bronze_reg_sync", dir, Schemas.trafficEvent)
+      val before = partitions("bronze_reg_sync")
+      assert(before("year=2025/month=12/day=30/hour=14"), before)
+      Lake.writeBronze(events.limit(3).withColumn("event_time", lit("2025-12-31T03:15:00Z")),
+        dir, "json", regFallback)
+      Scratch.deleteRecursively(new java.io.File(s"$dir/year=2025/month=12/day=30/hour=14"))
+      Lake.registerTable(spark, "bronze_reg_sync", dir, Schemas.trafficEvent)
+      assert(partitions("bronze_reg_sync") ==
+        before - "year=2025/month=12/day=30/hour=14" + "year=2025/month=12/day=31/hour=03")
+      // the 8 events of hour 14 left with their dir; the 3 new ones arrived
+      assert(rows("bronze_reg_sync") == 64 - 8 + 3)
+    } finally spark.sql("DROP TABLE IF EXISTS bronze_reg_sync")
+  }
+
+  test("a changed schema or location redefines the table") {
+    val dir = tmp()
+    val moved = tmp()
+    Lake.writeBronze(Generator.trafficEvents(spark, 64), dir, "json", regFallback)
+    Lake.writeBronze(Generator.trafficEvents(spark, 24), moved, "json", regFallback)
+    try {
+      Lake.registerTable(spark, "bronze_reg_def", dir, Schemas.trafficEvent)
+      spark.sql("ALTER TABLE bronze_reg_def SET TBLPROPERTIES ('probe' = 'kept')")
+      val narrower = org.apache.spark.sql.types.StructType(Schemas.trafficEvent.fields.init)
+      Lake.registerTable(spark, "bronze_reg_def", dir, narrower)
+      assert(probe("bronze_reg_def").isEmpty, "a schema change kept the old table")
+      assert(!spark.table("bronze_reg_def").columns.contains("event_time"))
+      assert(rows("bronze_reg_def") == 64 && partitions("bronze_reg_def").size == 8)
+
+      spark.sql("ALTER TABLE bronze_reg_def SET TBLPROPERTIES ('probe' = 'kept')")
+      Lake.registerTable(spark, "bronze_reg_def", moved, narrower)
+      assert(probe("bronze_reg_def").isEmpty, "a location change kept the old table")
+      // 24 events at 8 per hour: hours 14-16 of the moved lake only
+      assert(rows("bronze_reg_def") == 24 && partitions("bronze_reg_def").size == 3)
+    } finally spark.sql("DROP TABLE IF EXISTS bronze_reg_def")
+  }
+
+  test("a cached table sees files that landed since the last registration") {
+    val dir = tmp()
+    val events = Generator.trafficEvents(spark, 64)
+    Lake.writeBronze(events, dir, "json", regFallback)
+    try {
+      Lake.registerTable(spark, "bronze_reg_cached", dir, Schemas.trafficEvent)
+      spark.catalog.cacheTable("bronze_reg_cached")
+      assert(rows("bronze_reg_cached") == 64)
+      // another writer (Spark's own writer would refresh the cache
+      // itself) lands a second flush as new files in the same hour dirs
+      val flush = tmp()
+      Lake.writeBronze(events, flush, "json", regFallback)
+      val landed = Files.walk(java.nio.file.Paths.get(flush)).iterator().asScala
+        .filter(f => Files.isRegularFile(f) && f.getFileName.toString.startsWith("part-")).toSeq
+      assert(landed.nonEmpty)
+      landed.foreach { f =>
+        val rel = java.nio.file.Paths.get(flush).relativize(f)
+        Files.copy(f, java.nio.file.Paths.get(dir).resolve(rel.resolveSibling(s"late-${rel.getFileName}")))
+      }
+      assert(rows("bronze_reg_cached") == 64, "the cache was not in effect")
+      Lake.registerTable(spark, "bronze_reg_cached", dir, Schemas.trafficEvent)
+      assert(spark.catalog.isCached("bronze_reg_cached"))
+      assert(rows("bronze_reg_cached") == 128)
+    } finally {
+      spark.catalog.uncacheTable("bronze_reg_cached")
+      spark.sql("DROP TABLE IF EXISTS bronze_reg_cached")
+    }
   }
 
   test("retention drops partition dirs older than N days, keeps the rest (W8)") {
