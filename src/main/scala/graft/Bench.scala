@@ -92,7 +92,7 @@ object Bench {
 
   /** Child-JVM isolated measurement (see the isolated-figure note in
     * [[main]]): fresh session, q04 warm-up, min-of-2 back-to-back per
-    * name with the cache cleared between, emitted by the harness
+    * name with each attempt's pins released, emitted by the harness
     * itself so cross-round drift attribution ships in BENCH_r*.json
     * instead of ad-hoc scratch runs. Prints one `ISOLATED <name> <sec>` line per query. */
   private def isolatedChild(sfDir: String, names: Seq[String]): Unit = {
@@ -114,10 +114,8 @@ object Bench {
       val fn = SparkEntry.queries(name)
       def attempt(): Double = {
         val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        sec
+        Shared.scope(fn(spark, sfDir).count())
+        (System.nanoTime() - t0) / 1e9
       }
       // Round-12 lesson: iterative-plan queries (the q95 PageRank
       // family — dozens of short stages) showed 2.5-4x cross-machine
@@ -322,8 +320,9 @@ object Bench {
       System.gc()
       val gc0 = gcTotalSec()
       val t0 = System.nanoTime()
+      // the scope runs on the pool thread, where the query pins
       val fut = pool.submit(new java.util.concurrent.Callable[Boolean] {
-        def call(): Boolean = try {
+        def call(): Boolean = try Shared.scope {
           spark.sparkContext.setJobGroup(name, name, interruptOnCancel = true)
           val df = fn(spark, sfDir)
           if (explain) System.err.println(s"=== $name ===\n" + df.queryExecution.explainString(
@@ -344,12 +343,6 @@ object Bench {
           System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
       }
       val sec = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-      // lifecycle queries (q22b/q31b) persist their frames and cannot
-      // unpersist them from a fn that must return a DataFrame; each
-      // attempt also pins a FRESH entry (new UDF lambda → plan equality
-      // fails). Drop everything after every attempt so no later attempt
-      // is measured under leaked memory pressure.
-      spark.catalog.clearCache()
       (sec, gcTotalSec() - gc0)
     }
 

@@ -112,7 +112,7 @@ object CorpusDemo {
     * target. */
   def run(spark: SparkSession, sfDir: String, outDir: String,
           chunkTokens: Int = 50, stride: Int = 40,
-          budgetTokens: Long = 2000L, shards: Int = 4): Result = {
+          budgetTokens: Long = 2000L, shards: Int = 4): Result = Shared.scope {
     val docs = Tables.load(spark, sfDir, "documents")
       .select("doc_id", "source", "lang", "text")
     val inputDocs = docs.count()
@@ -121,13 +121,12 @@ object CorpusDemo {
     //    two docs identical up to their embedded identifiers become
     //    byte-identical after the scrub, so the digest dedup collapses
     //    them — scrubbing after dedup would let every PII variant
-    //    through as a distinct text. Cached: the count and the chunk
+    //    through as a distinct text. Pinned: the count and the chunk
     //    pipeline below both consume it, and the gate kernels + digest
     //    shuffle are the expensive stage.
-    val refined = Corpus.refine(
+    val refined = Shared.pin(Corpus.refine(
         docs.withColumn("text", Text.scrubPii(col("text"))),
-        "doc_id", "text")
-      .cache()
+        "doc_id", "text"))
     val survivors = refined.count()
 
     // 2. sliding-window chunks, one row per chunk (q52 shape). The
@@ -165,15 +164,14 @@ object CorpusDemo {
     //     convention. The chunk shards above stay ungated: retrieval
     //     windows serve search, the perplexity gate is an LM-training
     //     concern.
-    // cached: the count here plus trainerFeed's ≥4 actions (FIM
+    // pinned: the count here plus trainerFeed's ≥4 actions (FIM
     // count, merge-training collect, tokenize→pack→write, audit)
     // would otherwise each re-run the whole LM-scoring + cut chain
     val tailIds = graft.operators.LangModel.perplexityBuckets(
         refined, "doc_id", "text", "lang")
       .filter(col("bucket") === 2).select("doc_id")
-    val feedDocs = refined.select("doc_id", "text")
-      .join(tailIds, Seq("doc_id"), "left_anti")
-      .cache()
+    val feedDocs = Shared.pin(refined.select("doc_id", "text")
+      .join(tailIds, Seq("doc_id"), "left_anti"))
     val pplTailDropped = survivors - feedDocs.count()
 
     // 4c. the TRAINER FEED — the shared [[trainerFeed]] leg over the
@@ -185,9 +183,6 @@ object CorpusDemo {
     //     `survivors - pplTailDropped`.
     val feed = trainerFeed(spark, feedDocs,
       outDir, budgetTokens = budgetTokens, shards = shards)
-
-    feedDocs.unpersist()
-    refined.unpersist()
 
     val out = spark.read.parquet(s"$outDir/shards")
     val report = out.groupBy("shard")

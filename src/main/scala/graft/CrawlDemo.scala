@@ -82,23 +82,23 @@ object CrawlDemo {
           outDir: String, agent: String = "graftbot",
           shards: Int = 4, maxPerHost: Int = 4,
           sitemaps: Option[DataFrame] = None,
-          frontierTable: String = "graft_crawl_frontier"): Result = {
+          frontierTable: String = "graft_crawl_frontier"): Result = Shared.scope {
     import spark.implicits._
     val robotsHost = robots.columns.head
     val robotsTxt = robots.columns(1)
 
     // 1. ingest: one row per WARC record, HTTP responses split out
     //    (transfer/content codings already decoded by the reader)
-    val records = Warc.readWarc(spark, warcDir).cache()
+    val records = Shared.pin(Warc.readWarc(spark, warcDir))
     val nRecords = records.count()
-    val pages = records
+    val pages = Shared.pin(records
       .filter(col("warc_type") === "response" && col("http_status") === 200)
       .select(col("target_uri").as("url"),
         // charset-sniffed decode (BOM / header / meta / UTF-8 probe /
         // cp1252 fallback) — a raw cast would mojibake the legacy tail
         Charset.decodeText(col("body"), col("http_content_type"))
           .getField("text").as("html"),
-        // small scalars the WAT export reuses off this cache instead
+        // small scalars the WAT export reuses off this pin instead
         // of re-decoding every body at export time
         col("warc_date"), col("payload_digest"))
       // full 64-bit ids: a mod-10⁹ fold collides at birthday scale
@@ -106,12 +106,11 @@ object CrawlDemo {
       // doc_id join downstream); the raw hash is collision-free in
       // practice (~n²/2⁶⁵) and the export manifest folds internally,
       // so nothing downstream needs compact ids
-      .withColumn("doc_id", xxhash64(col("url")))
-      .cache()
+      .withColumn("doc_id", xxhash64(col("url"))))
     val nPages = pages.count()
     // belt-and-braces: a doc_id collision would silently merge pages
     // in every join below — fail loudly instead (cheap: pages is
-    // cached and |pages|-sized)
+    // pinned and |pages|-sized)
     val idClash = pages.agg(
       (countDistinct(col("url")) - countDistinct(col("doc_id"))).as("d"))
       .head().getLong(0)
@@ -137,10 +136,10 @@ object CrawlDemo {
     //     robots.txt gate below: noindex pages keep their links but
     //     lose their CONTENT; nofollow pages keep their content but
     //     their outlinks vanish from the graph and the frontier.
-    //     Cached: the two counts plus the extraction/link/quality
+    //     Pinned: the two counts plus the extraction/link/quality
     //     anti-joins would otherwise each re-run the scanHtml kernel
     //     over every page body.
-    val directives = Html.robotsDirectives(pages, "doc_id", "html").cache()
+    val directives = Shared.pin(Html.robotsDirectives(pages, "doc_id", "html"))
     val noindexIds = directives.filter(col("noindex")).select("doc_id")
     val nofollowIds = directives.filter(col("nofollow")).select("doc_id")
     val nNoindex = noindexIds.count()
@@ -200,15 +199,14 @@ object CrawlDemo {
       .unionByName(smEntries.select(Url.canonical(col("url")).as("url")))
       .filter(col("url").isNotNull).distinct()
     val smCount = smEntries.count()
-    val frontier = Robots.filterAllowed(discovered, "url", robots, agent)
-      .cache()
+    val frontier = Shared.pin(Robots.filterAllowed(discovered, "url", robots, agent))
     val nAllowed = frontier.filter(col("allowed")).count()
     val nDenied = frontier.filter(!col("allowed")).count()
 
     // 4b'. curate EARLY so its verdicts can feed the frontier: refine
     //     the extracted text, attach the host rank (broadcast — |hosts|
     //     rows) so downstream gates can budget by host quality
-    val refined = Corpus.refine(
+    val refined = Shared.pin(Corpus.refine(
         extracted.select(col("doc_id"), col("main_text").as("text")),
         "doc_id", "text", minQuality = None,
         // the C4 blocklist gate rides the same scan-side filter; a
@@ -219,8 +217,7 @@ object CrawlDemo {
         "doc_id")
       .join(broadcast(ranks.withColumnRenamed("node", "host")
         .withColumnRenamed("rank_micro", "host_rank_micro")),
-        Seq("host"), "left")
-      .cache()
+        Seq("host"), "left"))
 
     // 4b''. ANCHOR-TEXT relevance field (the web's oldest retrieval
     //     label — the text OTHER pages use to describe a target):
@@ -232,7 +229,10 @@ object CrawlDemo {
     //     the classic navigational win: anchor terms retrieve pages
     //     whose own text never says them. Chrome anchors (nav/footer
     //     labels — template noise, not descriptions) stay out.
-    val anchorField = links
+    // pinned: the target count, the probe head() and the export join
+    // each consume it — unpinned, every one re-runs the scanHtml
+    // kernel over all pages plus two joins (|targets| rows held)
+    val anchorField = Shared.pin(links
       .filter(col("anchor_text").isNotNull && !col("in_chrome"))
       .select(Url.resolve(col("base_url"), col("href")).as("url"),
         col("anchor_text"))
@@ -240,19 +240,14 @@ object CrawlDemo {
       .groupBy("url")
       .agg(concat_ws(" ", sort_array(collect_list(col("anchor_text"))))
           .as("anchor_terms"),
-        count(lit(1)).as("n_anchors"))
-      // cached: the target count, the probe head() and the export join
-      // each consume it — uncached, every one re-runs the scanHtml
-      // kernel over all pages plus two joins (|targets| rows held)
-      .cache()
+        count(lit(1)).as("n_anchors")))
     val nAnchorTargets = anchorField.count()
-    val refinedAnchored = refined
+    val refinedAnchored = Shared.pin(refined
       .join(pages.select(col("doc_id"),
         Url.canonical(col("url")).as("__curl")), "doc_id")
       .join(anchorField.select(col("url").as("__curl"),
         col("anchor_terms")), Seq("__curl"), "left")
-      .drop("__curl")
-      .cache()
+      .drop("__curl"))
     val nAnchored = refinedAnchored.filter(col("anchor_terms").isNotNull)
       .count()
     val anchorFusedHits =
@@ -362,7 +357,7 @@ object CrawlDemo {
     //    scanHtml pass), written as metadata-type segments and
     //    re-audited under its record type
     val watDir = outDir + "_wat"
-    // the cached pages frame already holds the charset-sniffed decode
+    // the pinned pages frame already holds the charset-sniffed decode
     // (a raw binary→UTF-8 cast would mojibake legacy-charset titles/
     // outlinks) plus the date/digest scalars — reuse it rather than
     // re-decoding every body at export time
@@ -393,10 +388,6 @@ object CrawlDemo {
     //    marks — the operational audit that catches a stale table
     val census = Warehouse.auditTables(spark, frontierTable)
 
-    records.unpersist(); pages.unpersist(); frontier.unpersist()
-    ranks.unpersist(); refined.unpersist(); chains.unpersist()
-    directives.unpersist(); refinedAnchored.unpersist()
-    anchorField.unpersist()
     Result(nRecords, nPages, nExtracted, nNoindex, nNofollow,
       nRedirects, nTerminals, nLoops,
       nEdges, nHosts, nSitemaps, smCount,

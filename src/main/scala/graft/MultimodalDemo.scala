@@ -41,7 +41,7 @@ object MultimodalDemo {
     * `outDir/pairs`, the interleaved docs under `outDir/interleaved`),
     * and audit each export. */
   def run(spark: SparkSession, sfDir: String, outDir: String,
-          cloneEvery: Int = 10, shards: Int = 8): Result = {
+          cloneEvery: Int = 10, shards: Int = 8): Result = Shared.scope {
     import spark.implicits._
     val ids = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id")).as[Long]
@@ -50,7 +50,7 @@ object MultimodalDemo {
     //    codec payloads); selected ids get a near-clone — +1 pixel
     //    brightness for images, 2x amplitude for audio (each lands
     //    within the fingerprint radius of its base, q102/q104 shape)
-    val media = ids.flatMap { id =>
+    val media = Shared.pin(ids.flatMap { id =>
       def png(off: Long) = {
         val w = 16 + (id % 8).toInt; val h = 12 + (id % 5).toInt
         val c = 1 + (id % 5)
@@ -75,7 +75,7 @@ object MultimodalDemo {
         Seq(base, Multimodal.MediaRow(id + 10000000L,
           if (isImage) png(1) else wav(2), base.format))
       else Seq(base)
-    }.cache()
+    })
     val inputMedia = media.count()
 
     // 2. metadata + per-modality fingerprints off the REAL decodes
@@ -89,14 +89,12 @@ object MultimodalDemo {
 
     // 3. one banding path for both modalities; drop every pair's
     //    larger id (clone ids are minted above every base id)
-    val pairs = Dedup.signaturePairs(imgSigs, radius = 6)
-      .unionByName(Dedup.signaturePairs(audSigs, radius = 2))
-      .cache()
+    val pairs = Shared.pin(Dedup.signaturePairs(imgSigs, radius = 6)
+      .unionByName(Dedup.signaturePairs(audSigs, radius = 2)))
     val dupPairs = pairs.count()
     val drops = pairs.select(col("doc_b").as("media_id")).distinct()
-    val kept = meta.join(drops, Seq("media_id"), "left_anti")
-      .select("media_id", "n_bytes", "format", "content_hash")
-      .cache()
+    val kept = Shared.pin(meta.join(drops, Seq("media_id"), "left_anti")
+      .select("media_id", "n_bytes", "format", "content_hash"))
     val survivors = kept.count()
 
     // 4. audited export of the surviving media metadata
@@ -122,14 +120,13 @@ object MultimodalDemo {
           lit(".png\" alt=\"render "), col("media_id"),
           lit("\"><figcaption>figure "), col("media_id"),
           lit("</figcaption></figure>")).as("html"))
-    // cached: the count, the kept-join's build side, the sharded write
+    // pinned: the count, the kept-join's build side, the sharded write
     // (twice internally: data + manifest) and the survivor count would
     // otherwise each re-run the pair-mining kernel over every page
-    val pairRows = Html.imageTextPairs(pages, "media_id", "url", "html")
+    val pairRows = Shared.pin(Html.imageTextPairs(pages, "media_id", "url", "html")
       .select(regexp_extract(col("image_url"), "m(\\d+)\\.png", 1)
           .cast("long").as("media_id"),
-        col("image_url"), col("alt_text"), col("caption"))
-      .cache()
+        col("image_url"), col("alt_text"), col("caption")))
     val imagePairs = pairRows.count()
     val pairsKept = pairRows.join(kept.select("media_id"), Seq("media_id"))
     val pairsDir = s"$outDir/pairs"
@@ -160,11 +157,10 @@ object MultimodalDemo {
           lit("</figcaption></figure>"),
           lit("<p>Closing paragraph for media item "), col("media_id"),
           lit(" is also long enough to keep.</p>")).as("html"))
-    val interRows = Html.interleavedDocs(iPages, "media_id", "url", "html")
+    val interRows = Shared.pin(Html.interleavedDocs(iPages, "media_id", "url", "html")
       .select(col("doc_id").as("media_id"), col("interleaved_text"),
         col("image_urls"), col("image_captions"), col("n_images"),
-        col("n_kept"))
-      .cache()
+        col("n_kept")))
     val interleavedDocs = interRows.count()
     val interKept = interRows.join(kept.select("media_id"), Seq("media_id"))
     val interDir = s"$outDir/interleaved"
@@ -186,11 +182,10 @@ object MultimodalDemo {
         col("image_urls")),
       "media_id", "interleaved_text", "image_urls",
       Seq(("t", "h"), ("i", "n"), ("e", "</w>")))
-    val interSeqs = graft.operators.Packing.assembleMultimodalSequences(
+    val interSeqs = Shared.pin(graft.operators.Packing.assembleMultimodalSequences(
       graft.operators.Packing.packContiguous(interToks, "media_id",
         "n_tokens", budget = 256L, shards = 2),
-      "media_id", "token_ids", "image_refs", orderCol = "media_id")
-      .cache()
+      "media_id", "token_ids", "image_refs", orderCol = "media_id"))
     val slotTable = graft.operators.Packing.imageSlotTable(interSeqs)
     val trainerSequences = interSeqs.count()
     val trainerImageSlots = slotTable.count()
@@ -204,10 +199,7 @@ object MultimodalDemo {
     val slotsReconcileOk = trainerImageSlots == keptImages &&
       attributedSlots == keptImages &&
       slotTable.filter(col("image_ref").isNull).isEmpty
-    interSeqs.unpersist()
 
-    media.unpersist(); pairs.unpersist(); kept.unpersist()
-    pairRows.unpersist(); interRows.unpersist()
     Result(inputMedia, images, audio, dupPairs, survivors, auditOk,
       imagePairs, pairSurvivors, pairAuditOk,
       interleavedDocs, interleavedKept, interleavedAuditOk,

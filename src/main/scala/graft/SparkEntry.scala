@@ -319,17 +319,19 @@ object SparkEntry {
 
   /** The one build-once convention for tmp artifacts (the WARC
     * fixtures, the streamed WET/WAT exports, the derived WAT/CDXJ and
-    * merge outputs): a dir keyed by `name` + docsTag +
-    * [[derivedCodeStamp]], so the bench's warm-up + min-of-2 protocol
+    * merge outputs, q79's Z-ordered lake): a dir keyed by `name` + the
+    * [[dataTag]] of the `tables` it derives from (documents unless
+    * named) + [[derivedCodeStamp]], so the bench's warm-up + min-of-2 protocol
     * times SERVE rather than re-export. `build` populates a staging
     * dir that is renamed into place: a build that throws publishes
     * nothing, and the next call clears its stage and builds again.
-    * Older-stamp siblings for the same (name, docsTag) are pruned
+    * Older-stamp siblings for the same (name, data tag) are pruned
     * before staging — iterative recompiles must not strand one
     * corpus-sized export per build in the temp dir. */
-  private[graft] def ensureDerivedDir(s: SparkSession, dir: String, name: String)
+  private[graft] def ensureDerivedDir(s: SparkSession, dir: String, name: String,
+                                      tables: Seq[String] = Seq("documents"))
                                      (build: String => Unit): String = {
-    val prefix = s"graft_${name}_${docsTag(s, dir)}"
+    val prefix = s"graft_${name}_${dataTag(s, dir, tables: _*)}"
     val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
     val root = new java.io.File(tmp, s"${prefix}_$derivedCodeStamp")
     if (!root.exists()) {
@@ -347,6 +349,14 @@ object SparkEntry {
     }
     root.toString
   }
+
+  /** JVM-lifetime parent of the tmp lakes and exports that battery
+    * entries rewrite on every call (deleted when the JVM exits). */
+  private lazy val callScratch = Scratch.dir("graft_battery").toFile
+
+  /** `callScratch/<name>`: the output dir of one rewrite-per-call entry. */
+  private def callDir(name: String): String =
+    new java.io.File(callScratch, name).toString
 
   /** The MemoryStream harness behind every streamed battery leg: the
     * collected `rows` (the S5 situation — no message bus in the
@@ -1148,8 +1158,8 @@ object SparkEntry {
     }),
 
     // q22 through the documented compute-once sketch lifecycle: the
-    // sketch frame is persisted, so banding and both pair branches read
-    // the cache (plan-asserted InMemoryTableScan) and the sketch kernel
+    // sketch frame is pinned, so banding and both pair branches read
+    // the pin (plan-asserted ExistingRDD scans) and the sketch kernel
     // runs once per document instead of up to 3x — the cluster default
     // for corpus-scale dedup. Identical pairs to q22, and oracled by the
     // same brute-force SQL — the lifecycle must not change the answer.
@@ -1158,8 +1168,8 @@ object SparkEntry {
       val clones = docs.filter(col("doc_id") < 5)
         .select((col("doc_id") + 100000).as("doc_id"),
           concat(col("text"), lit(" appended words")).as("text"))
-      val sk = graft.operators.Dedup.minhashSketches(docs.union(clones),
-        "doc_id", "text", numHashes = 128, bands = 16).persist()
+      val sk = Shared.pin(graft.operators.Dedup.minhashSketches(docs.union(clones),
+        "doc_id", "text", numHashes = 128, bands = 16))
       graft.operators.Dedup.minhashDedupFromSketches(sk, threshold = 0.8)
         .orderBy("doc_a", "doc_b")
     }),
@@ -2000,9 +2010,8 @@ object SparkEntry {
       // round-17: pin the winner set — it feeds both the ranged fetch
       // and the metadata join-back; unpinned, each branch re-walked
       // all ~467 segments through the CDX indexer. |urlkeys|-row
-      // narrow frame; released with the session cache.
-      val winners = W.latestCaptures(W.cdxIndex(s, wdir))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // narrow frame.
+      val winners = Shared.pin(W.latestCaptures(W.cdxIndex(s, wdir)))
       W.fetchByCdx(winners, wdir)
         .join(winners.select("filename", "offset", "member_record_index",
           "warc_date", "n_captures"),
@@ -2488,10 +2497,9 @@ object SparkEntry {
       // round-17: pin the resolved locator set — it feeds both the
       // ranged fetch and the metadata join-back, and each branch
       // re-ran BOTH segment-walking CDX index passes without the pin.
-      // |captures|-row narrow frame; released with the session cache.
-      val eff = W.resolveNotModified(
-        W.cdxIndex(s, s"$wdir/reval-b-*"), W.cdxIndex(s, s"$wdir/reval-a-*"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // |captures|-row narrow frame.
+      val eff = Shared.pin(W.resolveNotModified(
+        W.cdxIndex(s, s"$wdir/reval-b-*"), W.cdxIndex(s, s"$wdir/reval-a-*")))
       val bodies = W.fetchByCdx(eff, wdir)
         .select(col("filename"), col("offset"), col("member_record_index"),
           col("body").cast("string").as("body_text"))
@@ -3221,9 +3229,8 @@ object SparkEntry {
         W.writeCdxj(merged, s"$stage/cdxj-merged", shards = 3)
       }
       // round-17: pin — same two-consumer shape as q148's winner set
-      val winners = W.latestCaptures(
-        W.readCdxjPrefix(s, s"$base/cdxj-merged", "com,"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val winners = Shared.pin(W.latestCaptures(
+        W.readCdxjPrefix(s, s"$base/cdxj-merged", "com,")))
       W.fetchByCdx(winners, wdir)
         .join(winners.select("filename", "offset", "member_record_index",
           "warc_date", "n_captures"),
@@ -3850,15 +3857,14 @@ object SparkEntry {
       // round-17: the relevance set is referenced from several plan
       // branches (query derivation + the eval join) and its old
       // self-union form evaluated the verify join once PER DIRECTION
-      // PER BRANCH; the explode mirrors in one pass and the persist
-      // pins the |near-dup pairs|-bounded frame (truth-set-sized,
-      // never corpus-sized) so the verify join runs once per attempt.
-      val rel = pairs.select(explode(array(
+      // PER BRANCH; the explode mirrors in one pass and the pin holds
+      // the |near-dup pairs|-bounded frame (truth-set-sized, never
+      // corpus-sized) so the verify join runs once per attempt.
+      val rel = Shared.pin(pairs.select(explode(array(
           struct(col("doc_a").as("query_id"), col("doc_b").as("doc_id")),
           struct(col("doc_b").as("query_id"), col("doc_a").as("doc_id"))))
           .as("p"))
-        .select(col("p.query_id"), col("p.doc_id"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .select(col("p.query_id"), col("p.doc_id")))
       val queries = docs.join(
         rel.select(col("query_id").as("doc_id")).distinct(), Seq("doc_id"))
       // df-cap disabled HERE only: the synthetic corpus draws from a
@@ -3890,15 +3896,14 @@ object SparkEntry {
         invT, candT, n = 3, threshold = 0.5)
       val pairs = graft.operators.Dedup.ngramVerifiedPairs(
         s.table(invT), s.table(candT), threshold = 0.5)
-      // round-17: explode-mirror + persist — same rationale as q86
+      // round-17: explode-mirror + pin — same rationale as q86
       // (the old self-union re-ran the verify join per direction per
       // consuming branch; rel is truth-set-sized)
-      val rel = pairs.select(explode(array(
+      val rel = Shared.pin(pairs.select(explode(array(
           struct(col("doc_a").as("query_id"), col("doc_b").as("doc_id")),
           struct(col("doc_b").as("query_id"), col("doc_a").as("doc_id"))))
           .as("p"))
-        .select(col("p.query_id"), col("p.doc_id"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .select(col("p.query_id"), col("p.doc_id")))
       // Round-17 de-noise (r16 VERDICT #5): the raw 31-term vocabulary
       // made EVERY query match EVERY doc, so the candidate join was
       // |queries|×|docs| no matter the plan and the bench figure was
@@ -4120,8 +4125,6 @@ object SparkEntry {
     // scan's — which is the oracle. LayoutSpec measures the skip
     // rate; q79 pins the correctness end-to-end through real files.
     "q79_pruned_read" -> ((s, dir) => {
-      val zDir = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_q79_zlake_${dataTag(s, dir, "events")}").toString
       val ev = t(s, dir, "events")
         .select("event_id", "user_id", "event_type", "value")
       val st = ev.agg(
@@ -4129,11 +4132,11 @@ object SparkEntry {
         min("event_id").as("emin"), max("event_id").as("emax")).head()
       val (umin, umax, emin, emax) =
         (st.getLong(0), st.getLong(1), st.getLong(2), st.getLong(3))
-      if (!new java.io.File(zDir, "_SUCCESS").exists())
-        graft.operators.Layout.writeZOrdered(ev, zDir,
+      val zDir = ensureDerivedDir(s, dir, "q79_zlake", Seq("events"))(stage =>
+        graft.operators.Layout.writeZOrdered(ev, stage,
           Seq(graft.operators.Layout.quantize(col("user_id"), lit(umin), lit(umax), 8),
               graft.operators.Layout.quantize(col("event_id"), lit(emin), lit(emax), 8)),
-          bits = 8, numFiles = 64)
+          bits = 8, numFiles = 64))
       val manifest = graft.operators.Layout.buildManifest(
         s, zDir, Seq("user_id", "event_id"))
       graft.operators.Layout.prunedRead(s, manifest, Map(
@@ -4180,8 +4183,7 @@ object SparkEntry {
     // brand-new (negative) keys, then read the tree back. The oracle
     // states the post-merge table in closed form.
     "q77_lake_upsert" -> ((s, dir) => {
-      val lakeDir = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_q77_lake_${dataTag(s, dir, "events")}").toString
+      val lakeDir = callDir(s"q77_lake_${dataTag(s, dir, "events")}")
       val ev = t(s, dir, "events")
       val base = ev.select(col("event_id"), col("value"),
         lit(0).as("rev"), col("event_type"))
@@ -4318,8 +4320,7 @@ object SparkEntry {
     // a skipped leaf, or a leftover fragment each breaks a column.
     "q66_compaction" -> ((s, dir) => {
       import s.implicits._
-      val lakeDir = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_q66_lake_${docsTag(s, dir)}").toString
+      val lakeDir = callDir(s"q66_lake_${docsTag(s, dir)}")
       t(s, dir, "documents").select(col("doc_id"), col("text"))
         .withColumn("year", lit("2026")).withColumn("month", lit("01"))
         .withColumn("day", lit("01"))
@@ -4648,8 +4649,7 @@ object SparkEntry {
     // so a row lost, duplicated, or misplaced between write and
     // re-read breaks the hash, and `ok` must be uniformly true.
     "q105_export_manifest" -> ((s, dir) => {
-      val out = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_q105_export_${docsTag(s, dir)}").toString
+      val out = callDir(s"q105_export_${docsTag(s, dir)}")
       val docs = t(s, dir, "documents").select("doc_id", "text")
       graft.operators.Sampling.writeShardedWithManifest(docs, "doc_id", 16, out)
       // the moments are DECIMAL(38,0) of the mod-P fold; battery ids
@@ -4674,10 +4674,8 @@ object SparkEntry {
     // must both equal the oracle's closed-form digest — byte identity
     // through the write+read round trip, not just equal lengths.
     "q106_quarantine" -> ((s, dir) => {
-      val out = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_q106_bronze_${docsTag(s, dir)}").toString
-      val dl = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_q106_deadletter_${docsTag(s, dir)}").toString
+      val out = callDir(s"q106_bronze_${docsTag(s, dir)}")
+      val dl = callDir(s"q106_deadletter_${docsTag(s, dir)}")
       t(s, dir, "documents").select(
         when(pmod(col("doc_id"), lit(10)) === 0,
           concat(lit("{\"doc_id\": "), col("doc_id").cast("string")))
@@ -5099,8 +5097,7 @@ object SparkEntry {
     // per-record payload byte counts, and the charset ladder's
     // verdict on envelope-less UTF-8 payloads all stated closed-form.
     "q123_warc_roundtrip" -> ((s, dir) => {
-      val out = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_q123_wet_${docsTag(s, dir)}").toString
+      val out = callDir(s"q123_wet_${docsTag(s, dir)}")
       val docs = t(s, dir, "documents").select(
         concat(lit("https://site"),
           pmod(col("doc_id"), lit(20)).cast("string"),
@@ -5345,13 +5342,10 @@ object SparkEntry {
             .as("dst"))
       val chains = graft.operators.Url.resolveRedirectChains(
         redirects, "src", "dst", maxHops = 4)
-      // round-18: the chains frame stays persisted through the consume
-      // (the Url.scala contract hands its unpersist to the caller; the
-      // bench clears the session cache after every attempt). The old
-      // eager unpersist-before-return made the TIMED count recompute
-      // the whole maxHops join cascade — including one full WARC-walk
-      // edge derivation per hop reference, five segment walks per call
-      // — after the operator had already materialized it once.
+      // the chains frame is pinned in the caller's scope: releasing it
+      // before the consume made the TIMED count recompute the whole
+      // maxHops join cascade (one full WARC-walk edge derivation per
+      // hop reference, five segment walks per call).
       chains.filter(col("url").contains("/start"))
         .select(
           regexp_extract(col("url"), "start(\\d+)\\.html", 1)

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Shared
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -110,7 +111,7 @@ object Classifier {
     * path additionally requires the set's total text bytes under this
     * bound (default 64 MB — comfortably inside any driver heap, and
     * far above every annotation-budget training set); the byte check
-    * is one tiny aggregate over the already-persisted ≤65k-row frame,
+    * is one tiny aggregate over the already-pinned ≤65k-row frame,
     * paid only on the small-row path that was about to collect anyway. */
   private val LocalTrainMaxBytes =
     sys.env.getOrElse("GRAFT_LOCAL_TRAIN_MAX_BYTES", (64L << 20).toString).toLong
@@ -122,9 +123,9 @@ object Classifier {
                     localTrainMaxBytes: Long = LocalTrainMaxBytes): (Array[Double], Double) = {
     requirePow2(dim)
     import docs.sparkSession.implicits._
-    val data = docs.select(col(textCol), col(labelCol).cast("double"))
-      .as[(String, Double)].persist()
-    try {
+    Shared.scope {
+      val data = Shared.pin(docs.select(col(textCol), col(labelCol).cast("double"))
+        .as[(String, Double)])
       val nRows = data.count()
       val n = nRows.toDouble
       require(n > 0, "trainLogistic needs a non-empty corpus")
@@ -186,7 +187,7 @@ object Classifier {
         b = b - lr / n * grads.getOrElse(dim, 0.0)
       }
       (w, b)
-    } finally data.unpersist()
+    }
   }
 
   /** Learned float weights quantized to integer milli-units

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Shared
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -41,21 +42,15 @@ object Components {
         .filter(col("u") =!= col("v"))
         .distinct()
 
-    // localCheckpoint (not persist): an iterated DataFrame's LOGICAL
-    // plan nests one level per round even when persisted, and ~10+
-    // rounds of star operations overflow Catalyst's analysis stack.
-    // Checkpointing materializes the round eagerly and truncates the
-    // lineage to the stored blocks; superseded rounds are freed
-    // explicitly below (GC/ContextCleaner alone would let up to three
-    // materialized edge-set copies per round pile up in block-manager
-    // storage on exactly the corpus-scale graphs this targets). (On a
-    // real cluster with lineage-loss concerns, reliable `checkpoint`
-    // to the checkpoint dir is the drop-in alternative.)
-    // materialize the input pair list before sym() references it twice
+    // every round is pinned (an iterated DataFrame's LOGICAL plan nests
+    // one level per round even when persisted, and ~10+ rounds of star
+    // operations overflow Catalyst's analysis stack); superseded rounds
+    // are released below, so at most three edge-set copies are stored
+    // at once on exactly the corpus-scale graphs this targets.
+    // The input pair list is pinned before sym() references it twice
     // (u,v and v,u branches) — otherwise an expensive upstream pair
     // generation (e.g. n-gram Jaccard) executes once per branch
-    val input = edges.select(col(aCol).as("u"), col(bCol).as("v"))
-      .localCheckpoint()
+    val input = Shared.pin(edges.select(col(aCol).as("u"), col(bCol).as("v")))
 
     // row counts ride each checkpoint's materialization job as an
     // Observation (computed by the tasks that are already running) —
@@ -63,23 +58,11 @@ object Components {
     // round, instead of the two count() jobs it used to launch.
     def checkpointCounted(df: DataFrame): (DataFrame, Long) = {
       val obs = org.apache.spark.sql.Observation()
-      val ck = df.observe(obs, count(lit(1)).as("n")).localCheckpoint()
+      val ck = Shared.pin(df.observe(obs, count(lit(1)).as("n")))
       (ck, obs.get("n").asInstanceOf[Long])
     }
 
     var (cur, curCount) = checkpointCounted(sym(input))
-
-    // free a superseded checkpoint's blocks now, not at some future GC:
-    // a localCheckpointed frame is a LogicalRDD leaf over a persisted
-    // RDD, and unpersisting that RDD is the only prompt release.
-    // (`input` stays live — the lazy singleton/root frames below read
-    // it when the CALLER executes the result.)
-    def free(df: DataFrame): Unit =
-      df.queryExecution.analyzed.foreach {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          lr.rdd.unpersist(blocking = false)
-        case _ => ()
-      }
 
     var converged = false
     var iter = 0
@@ -93,7 +76,7 @@ object Components {
         .filter(col("v") > col("u"))
         .select(col("v").as("u"), col("m").as("v"))
         .filter(col("u") =!= col("v"))
-      val afterLarge = sym(large).localCheckpoint()
+      val afterLarge = Shared.pin(sym(large))
 
       // small-star: every neighbor v <= u (and u itself) links to m(u)
       val directed = afterLarge.filter(col("v") < col("u"))
@@ -110,8 +93,10 @@ object Components {
       // anti-join runs only on rounds whose counts already agree —
       // typically once, at convergence itself.
       converged = nextCount == curCount && next.except(cur).isEmpty
-      free(afterLarge)
-      free(cur)
+      // (`input` stays pinned — the lazy singleton/root frames below
+      // read it when the CALLER executes the result)
+      Shared.release(afterLarge)
+      Shared.release(cur)
       cur = next
       curCount = nextCount
       iter += 1
@@ -170,7 +155,7 @@ object Components {
     * (battery q126 pins the streamed lifecycle closed-form). */
   def appendToComponentsTable(spark: SparkSession, pairs: DataFrame,
                               aCol: String, bCol: String,
-                              table: String): Unit = {
+                              table: String): Unit = Shared.scope {
     val remapT = table + "_remap"
     val e = pairs.select(col(aCol).cast("long").as("u"),
       col(bCol).cast("long").as("v"))
@@ -190,7 +175,7 @@ object Components {
         .write.saveAsTable(remapT)
       return
     }
-    val eCk = e.localCheckpoint() // referenced by 2 endpoint joins
+    val eCk = Shared.pin(e) // referenced by 2 endpoint joins
     val base = spark.table(table)
     val remap = spark.table(remapT)
     val resolve = componentsFromTable(spark, table)
@@ -205,24 +190,22 @@ object Components {
       .filter(col("a") =!= col("b"))
     val batchNodes = eCk.select(col("u").as("node"))
       .union(eCk.select(col("v").as("node"))).distinct()
-    val newNodes = batchNodes
-      .join(base.select("node"), Seq("node"), "left_anti")
-      .localCheckpoint()
+    val newNodes = Shared.pin(batchNodes
+      .join(base.select("node"), Seq("node"), "left_anti"))
     if (repEdges.isEmpty && newNodes.isEmpty) return // pure replay: no-op
-    val cc = connectedComponents(repEdges, "a", "b").localCheckpoint()
+    val cc = Shared.pin(connectedComponents(repEdges, "a", "b"))
     // merges among EXISTING representatives (cc nodes that are not new)
     val cm = cc.join(newNodes, Seq("node"), "left_anti")
       .filter(col("component") =!= col("node"))
       .select(col("node").as("old_comp"), col("component").as("new_comp"))
     // path-compress the standing remap through this batch's merges,
     // then add them; materialize BEFORE overwriting the table read above
-    val updatedRemap = remap.alias("r")
+    val updatedRemap = Shared.pin(remap.alias("r")
       .join(cm.alias("m"), col("r.new_comp") === col("m.old_comp"), "left")
       .select(col("r.old_comp").as("old_comp"),
         coalesce(col("m.new_comp"), col("r.new_comp")).as("new_comp"))
       .unionByName(cm)
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     updatedRemap.write.mode("overwrite").saveAsTable(remapT)
     // base stays append-only: new nodes land with their (current)
     // component; self-loop-only newcomers are their own singletons

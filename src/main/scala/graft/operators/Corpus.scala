@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Shared
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.Text
@@ -44,11 +45,11 @@ object Corpus {
     // keeper aggregate and the semi-join's left side) and Spark
     // re-executes common subplans per branch — every enabled gate
     // kernel (langId, qualityScore, dupTokenFraction, …) ran twice
-    // over the corpus. localCheckpoint materializes the gated rows
-    // once (raw partitions, no columnar-cache barrier — the q31
-    // discipline), so each kernel runs exactly once per call.
-    val filtered = signalGates(df, textCol, langs, minQuality,
-      maxDupTokenFraction, badwords, gopherRepetition).localCheckpoint()
+    // over the corpus. Pinning materializes the gated rows once (raw
+    // partitions, no columnar-cache barrier — the q31 discipline), so
+    // each kernel runs exactly once per call.
+    val filtered = Shared.pin(signalGates(df, textCol, langs, minQuality,
+      maxDupTokenFraction, badwords, gopherRepetition))
     val exact = Dedup.dropExactDuplicates(filtered, idCol, textCol)
     if (dropNearDups)
       Dedup.dropNearDuplicates(exact, idCol, textCol, nearDupThreshold)
@@ -98,16 +99,16 @@ object Corpus {
     *
     * Plan shape: the per-row signal kernels are ONE scan-side
     * projection, each kernel appearing at exactly ONE plan site
-    * (PlanSpec-pinned), and that projection is `localCheckpoint`ed
-    * before the funnel fans out — the duplicate verdict needs the
-    * keeper-per-digest map (the q19 digest hash-agg restricted to
+    * (PlanSpec-pinned), and that projection is pinned
+    * ([[graft.Shared.pin]]) before the funnel fans out — the duplicate
+    * verdict needs the keeper-per-digest map (the q19 digest hash-agg restricted to
     * gate-passing docs, identical semantics to [[refine]]'s dedup
     * stage) joined back on the digest, which makes the verdict plan
     * reference the flagged frame from THREE arms (outer left join +
-    * both sides of the keeper join). Without the checkpoint each arm
+    * both sides of the keeper join). Without the pin each arm
     * re-runs every kernel — with the Gopher ladder that was a ~30×
     * kernel multiplication (the round-15 q171b defect, 26.5 s for a
-    * 1 s kernel). The checkpoint also means this call is EAGER: the
+    * 1 s kernel). The pin also means this call is EAGER: the
     * gate kernels run when [[gateAttribution]] is invoked, and the
     * materialized frame carries only `(id, digest, flags, rule)` —
     * document text never persists. Output is per-doc
@@ -134,8 +135,8 @@ object Corpus {
                       maxDupTokenFraction: Double = 0.5,
                       namedRepetition: Boolean = false,
                       badwords: Option[Seq[String]] = None): DataFrame = {
-    val flagged = gateFlagged(df, idCol, textCol, langs, minQuality,
-      maxDupTokenFraction, namedRepetition, badwords).localCheckpoint()
+    val flagged = Shared.pin(gateFlagged(df, idCol, textCol, langs, minQuality,
+      maxDupTokenFraction, namedRepetition, badwords))
     val passing = flagged
       .filter(col("__nn") && col("__lang") && col("__q") && col("__bw") &&
         col("__rule").isNull)
@@ -410,8 +411,8 @@ object Corpus {
       if (!spark.catalog.tableExists(table)) incoming
       else incoming.join(spark.table(table), Seq("kind", "value"),
         "left_anti")
-    val staged = fresh.persist() // counted AND written
-    try {
+    Shared.scope {
+      val staged = Shared.pin(fresh) // counted AND written
       val n = staged.count()
       if (n == 0L) return 0L
       if (!spark.catalog.tableExists(table)) {
@@ -419,6 +420,6 @@ object Corpus {
         staged.write.saveAsTable(table)
       } else staged.write.mode("append").saveAsTable(table)
       n
-    } finally staged.unpersist()
+    }
   }
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Shared
 import graft.functions.Text
 
 /** Large-scale document deduplication operators (the LLM-training-data
@@ -395,12 +396,13 @@ object Dedup {
     * over the corpus (banding + each pair side). That is the deliberate
     * trade against shuffling 2 KB sketch payloads through the band
     * self-join (the kernel is ~60 µs/doc; the shuffle would dominate at
-    * scale). For compute-once, persist this frame yourself and run
-    * [[minhashDedupFromSketches]] off it — you own the lifecycle:
+    * scale). For compute-once, pin this frame and run
+    * [[minhashDedupFromSketches]] off it:
     * {{{
-    *   val sk = Dedup.minhashSketches(docs, "doc_id", "text").persist()
-    *   try Dedup.minhashDedupFromSketches(sk, threshold = 0.8).collect()
-    *   finally sk.unpersist()
+    *   Shared.scope {
+    *     val sk = Shared.pin(Dedup.minhashSketches(docs, "doc_id", "text"))
+    *     Dedup.minhashDedupFromSketches(sk, threshold = 0.8).collect()
+    *   }
     * }}}
     * At cluster scale, write the sketches to a table once and run
     * banding/verification off that. */
@@ -501,15 +503,12 @@ object Dedup {
     // over the corpus three times (measured 2.2 s -> 1.1 s at sf0.1
     // with the pin). The serve lifecycles (sketch TABLE, q22b/q109)
     // already amortize across calls; this pins the within-call fan-out
-    // for the ad-hoc form. The pinned frame is released with the
-    // session's cache (the battery clears per attempt); long-lived
-    // sessions should prefer the table lifecycle anyway.
+    // for the ad-hoc form.
     minhashDedupFromSketches(
-      minhashSketches(df, idCol, textCol, numHashes, bands, shingleK)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
+      Shared.pin(minhashSketches(df, idCol, textCol, numHashes, bands, shingleK)),
       threshold)
 
-  /** [[minhashDedup]] over a pre-built (possibly persisted) sketch frame
+  /** [[minhashDedup]] over a pre-built (possibly pinned) sketch frame
     * from [[minhashSketches]]. */
   def minhashDedupFromSketches(sk: DataFrame, threshold: Double = 0.8): DataFrame = {
     val sh = sk.select(col("doc_id"), col("mh.shingles").as("sh"))
@@ -557,7 +556,7 @@ object Dedup {
     // band_hash), never the shingle array, which would otherwise ride
     // every one of its doc's `bands` exploded rows through the join
     // projection (the round-15 ADVICE). Candidates dedup to distinct
-    // (doc, bench) pairs and localCheckpoint — the frame is bounded
+    // (doc, bench) pairs and are pinned — the frame is bounded
     // by true contamination + the LSH false-positive tail, and
     // materializing it keeps the band-join subtree from re-executing
     // under the verify pass's semi-join (this makes the call EAGER).
@@ -569,9 +568,8 @@ object Dedup {
         bands, shingleK)
       .select(col("doc_id").as("bench_id"), posexplode(col("mh.bands")))
       .toDF("bench_id", "band_id", "band_hash")
-    val cand = cBands.join(broadcast(bBands), Seq("band_id", "band_hash"))
-      .select("doc_id", "bench_id").distinct()
-      .localCheckpoint()
+    val cand = Shared.pin(cBands.join(broadcast(bBands), Seq("band_id", "band_hash"))
+      .select("doc_id", "bench_id").distinct())
     // verify pass: shingles attach to the DEDUPED candidate set — the
     // kernel re-runs only on semi-joined candidate docs (the corpus
     // scan repeats, the sketch work does not), and both small sides
@@ -646,14 +644,12 @@ object Dedup {
     // it from BOTH sides, and Spark re-executes the common subplan per
     // side, which re-ran whatever kernel produced `sigs` (a SimHash
     // text pass, a PNG/WAV/MJPEG decode) twice per call. The pinned
-    // frame is (radius+1)·|docs| narrow rows; released with the
-    // session cache (battery clears per attempt).
-    val banded = withSig.select(col("doc_id"), col("sig"),
+    // frame is (radius+1)·|docs| narrow rows.
+    val banded = Shared.pin(withSig.select(col("doc_id"), col("sig"),
       posexplode(transform(sequence(lit(0), lit(chunks - 1)),
         c => call_function("shiftright", col("sig"), c * lit(width))
           .bitwiseAND(lit(mask)))))
-      .withColumnRenamed("pos", "chunk_id").withColumnRenamed("col", "chunk")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumnRenamed("pos", "chunk_id").withColumnRenamed("col", "chunk"))
     val a = banded.select(col("chunk_id"), col("chunk"),
       col("doc_id").as("doc_a"), col("sig").as("sig_a"))
     val b = banded.select(col("chunk_id"), col("chunk"),
@@ -699,13 +695,9 @@ object Dedup {
     * [[ngramJaccard]] references this frame from several plan branches
     * (frequency agg, prefix index, restricted overlap index) and Spark
     * does not deduplicate common subplans, so the gram kernel re-runs
-    * per branch. For corpus scale, persist this frame (or write it to
-    * a table) and run [[ngramJaccardFromIndex]] off it:
-    * {{{
-    *   val inv = Dedup.ngramIndex(docs, "doc_id", "text").persist()
-    *   try Dedup.ngramJaccardFromIndex(inv, threshold = 0.5).collect()
-    *   finally inv.unpersist()
-    * }}}
+    * per branch. For corpus scale, write this frame to a table
+    * ([[ensureNgramTables]]) and run [[ngramJaccardFromIndex]] off
+    * it; the one-shot form pins it itself.
     * Docs with fewer than `n` words contribute one gram — the whole
     * normalized text ([[Sketches.wordNgrams]]) — so verbatim short-doc
     * copies still pair at jaccard 1 (and the DuckDB oracle agrees). */
@@ -761,8 +753,8 @@ object Dedup {
       .select(col("train_id").as("doc_id"), col("n_hits"),
         col("n_bench_items"))
 
-  /** [[ngramJaccard]] over a pre-built (possibly persisted) inverted
-    * index from [[ngramIndex]].
+  /** [[ngramJaccard]] over a pre-built inverted index from
+    * [[ngramIndex]].
     *
     * Plan-shape warning for the compute-once lifecycle: this DAG
     * references `cands` from three downstream branches (candDocs ×2 +
@@ -771,12 +763,13 @@ object Dedup {
     * the candidate self-join ~5× and the index subtree 22×. Persisting
     * `inv` alone (the round-3/4 lifecycle) still re-runs the candidate
     * join per branch, which is why it measured SLOWER than recompute.
-    * The winning lifecycle persists BOTH branch points:
+    * The winning lifecycle pins BOTH branch points, which is what
+    * this function does (its result reads both pins):
     * {{{
-    *   val inv   = Dedup.ngramIndex(docs, "doc_id", "text").persist()
-    *   val cands = Dedup.ngramCandidates(inv, threshold = 0.5).persist()
-    *   try Dedup.ngramVerifiedPairs(inv, cands, threshold = 0.5).collect()
-    *   finally { cands.unpersist(); inv.unpersist() }
+    *   Shared.scope {
+    *     Dedup.ngramJaccardFromIndex(Dedup.ngramIndex(docs, "doc_id", "text"),
+    *       threshold = 0.5).collect()
+    *   }
     * }}} */
   def ngramJaccardFromIndex(inv: DataFrame, threshold: Double = 0.5): DataFrame =
     // Round-18 (guide §3.3/§5 — truncate re-executed subtrees without
@@ -785,7 +778,7 @@ object Dedup {
     // downstream (candDocs ×2 + the verification join) and each
     // reference re-ran the prefix self-join AND its whole inv subtree
     // (gram kernel included; the one-shot plan ran the index subtree
-    // ~22×). localCheckpoint materializes each branch point once as
+    // ~22×). Pinning materializes each branch point once as
     // raw partitions — no columnar cache encode/decode, which is what
     // made persist() lose to recompute here in rounds 3/4/17 — so the
     // gram kernel and the candidate self-join execute exactly once per
@@ -793,9 +786,8 @@ object Dedup {
     // at sf0.1: 3.5-3.7 s → 2.3-3.1 s isolated; checkpointing
     // ngramVerifiedPairs' restricted index as well was a wash and is
     // left out (it would also tax the table-served lifecycle).
-    { val inv0 = inv.localCheckpoint()
-      ngramVerifiedPairs(inv0,
-        ngramCandidates(inv0, threshold).localCheckpoint(), threshold) }
+    { val inv0 = Shared.pin(inv)
+      ngramVerifiedPairs(inv0, Shared.pin(ngramCandidates(inv0, threshold)), threshold) }
 
   /** Build-once/serve-many lifecycle for the n-gram index: write the
     * inverted index ([[ngramIndex]]) and its PPJoin candidate pair set
@@ -923,24 +915,19 @@ object Dedup {
     val fresh = newDocs.join(
       spark.table(tbl.pinv).select(col("doc_id").as(idCol)).distinct(),
       Seq(idCol), "left_anti")
-    // localCheckpoint, not persist: the delta's LINEAGE reads the very
+    // pinned, which CUTS the lineage: the delta's lineage reads the very
     // tables the append writes (the idempotency anti-join reads `pinv`),
     // and writing a table invalidates caches built over it — a lazily
     // re-evaluated delta would then anti-join its own docs away and
-    // append nothing. Checkpointing materializes the delta-sized frames
-    // and CUTS that lineage before any table is touched. (On a real
-    // cluster with executor-loss concerns, reliable `checkpoint` is the
-    // drop-in alternative, as in [[Components.connected]].)
-    val delta = ngramIndex(fresh, idCol, textCol, n).localCheckpoint()
-    try {
-      if (delta.isEmpty) return
-      // heal: skip rows of docs a crashed attempt already put in inv
-      delta.join(spark.table(tbl.inv).select("doc_id").distinct(),
+    // append nothing. Both delta-sized frames are released on return.
+    Shared.scope {
+      val delta = Shared.pin(ngramIndex(fresh, idCol, textCol, n))
+      if (!delta.isEmpty) {
+        // heal: skip rows of docs a crashed attempt already put in inv
+        delta.join(spark.table(tbl.inv).select("doc_id").distinct(),
           Seq("doc_id"), "left_anti")
         .write.mode("append").saveAsTable(tbl.inv)
-      val pNew = prefixUnderOrder(delta, spark.table(tbl.dfreq), threshold)
-        .localCheckpoint()
-      try {
+        val pNew = Shared.pin(prefixUnderOrder(delta, spark.table(tbl.dfreq), threshold))
         // every delta pair touches >= 1 fresh doc. ONE gram join with
         // the delta on the build side — a fresh doc's id can fall on
         // either side of the canonical `<`, so instead of running the
@@ -973,8 +960,8 @@ object Dedup {
           .write.mode("append").saveAsTable(tbl.cands)
         // commit: the marker goes last
         pNew.write.mode("append").saveAsTable(tbl.pinv)
-      } finally pNew.unpersist()
-    } finally delta.unpersist()
+      }
+    }
   }
 
   /** Prefix rows `(doc_id, sz, gram)` of an [[ngramIndex]] frame under
@@ -1006,7 +993,7 @@ object Dedup {
   /** PPJoin candidate pairs `(doc_a, doc_b, sz_a, sz_b)` from an
     * [[ngramIndex]] frame: prefix-filtered inverted-index self-join +
     * size-ratio prune. The second branch point of the n-gram plan —
-    * persist it alongside `inv` for the compute-once lifecycle (see
+    * pin it alongside `inv` for the compute-once lifecycle (see
     * [[ngramJaccardFromIndex]]). */
   def ngramCandidates(inv: DataFrame, threshold: Double = 0.5): DataFrame = {
     // global canonical order: ascending document frequency, then gram

@@ -1,8 +1,8 @@
 package graft.operators
 
+import graft.Shared
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Distributed link-graph ranking (Brin & Page 1998's PageRank) in
   * EXACT integer arithmetic — the domain/page quality signal a
@@ -25,7 +25,8 @@ import org.apache.spark.storage.StorageLevel
   *
   * Two lifecycles, identical ranks:
   *  - Ad-hoc ([[pageRankMicro]]): derives edges+out-degrees and nodes
-  *    in-session, persists them, iterates, releases the scratch.
+  *    in-session, pins them, iterates, pins the final ranks and
+  *    releases the scratch.
   *  - Standing workload ([[ensureEdgeTable]] + [[pageRankMicroFromTable]]):
   *    the derivation — the expensive part, a distinct over the raw
   *    pair stream plus the out-degree fold — happens ONCE into catalog
@@ -37,19 +38,17 @@ import org.apache.spark.storage.StorageLevel
   *
   * Scale shape: per iteration, ranks join out-degrees on the node key
   * (both |nodes|-sized, co-partitioned after the first exchange), the
-  * edge list joins on `src` (edges persisted pre-partitioned by `src`
+  * edge list joins on `src` (edges pinned pre-partitioned by `src`
   * once, reused every iteration), and contributions aggregate by
   * `dst` — the one unavoidable PageRank exchange, with map-side
   * combine because the aggregate is a plain integer SUM. Nothing is
   * ever collected; driver state is the node count. Every
-  * `checkpointEvery` iterations the rank frame is persisted,
-  * MATERIALIZED, and the previous one released — downstream stages
-  * read the cached blocks, so no iteration ever recomputes an earlier
-  * one (the logical plan object still nests; at very high iteration
-  * counts swap the persist for `localCheckpoint` to truncate it).
-  * The scratch frames (edge list, node list) are unpersisted before
-  * returning; the RETURNED rank frame is persisted and materialized —
-  * the caller owns its unpersist.
+  * `checkpointEvery` iterations the rank frame is pinned
+  * ([[graft.Shared.pin]]: materialized, lineage cut) and the previous
+  * one released — downstream stages read the stored blocks, so no
+  * iteration ever recomputes an earlier one and the plan never nests
+  * deeper than `checkpointEvery` steps. Pins not released before
+  * returning belong to the caller's [[graft.Shared.scope]].
   */
 object Graph {
 
@@ -166,17 +165,16 @@ object Graph {
     //
     // Round-17 build shape: [[edgesWithOutDegree]] is now the ONE-
     // exchange repartition(src) + windowed-count pipeline, so the
-    // intermediate dedup cache the old build materialized (a second
-    // |edges|-sized cache, written once and scanned three times) is
+    // intermediate dedup frame the old build materialized (a second
+    // |edges|-sized copy, written once and scanned three times) is
     // gone — e IS the first materialization, and the node list derives
-    // from the e cache (two cheap cached scans + a partial-aggregated
-    // distinct). Old build: 3 edge-list exchanges + 2 edge-list cache
-    // writes, 5.4 s at sf0.1; new: 1 exchange + 1 cache write, the
+    // from the pinned e (two cheap scans + a partial-aggregated
+    // distinct). Old build: 3 edge-list exchanges + 2 edge-list
+    // materializations, 5.4 s at sf0.1; new: 1 exchange + 1, the
     // derivation itself ~0.9 s.
     val spark = edges.sparkSession
-    val e0 = edgesWithOutDegree(edges, srcCol, dstCol, assumeDistinct)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val edgeCount = e0.count() // materialize before deriving nodes from the cache
+    val e0 = Shared.pin(edgesWithOutDegree(edges, srcCol, dstCol, assumeDistinct))
+    val edgeCount = e0.count()
     // Round-18 (guide §2.1/§2.2 — fewer, larger partitions; derive the
     // count from the DATA, not the session constant): the iteration
     // loop runs `iterations × 3` stages whose exchanges all inherit
@@ -193,36 +191,35 @@ object Graph {
     // number a 100 TB graph needs so per-task hash state stays bounded
     // (the old conf-driven behavior, restored exactly where it
     // matters). The AQE coalescing that would normally fix the small
-    // case cannot: the loop's frames are persisted, and AQE does not
-    // re-partition cached plans (canChangeCachedPlanOutputPartitioning
-    // defaults false).
+    // case cannot: the loop's frames are pinned, and their stored
+    // partitioning is fixed.
     val p = iterationPartitions(edgeCount,
       spark.sparkContext.defaultParallelism)
     val prevConf = spark.conf.get("spark.sql.shuffle.partitions")
     val e = if (p == prevConf.toInt) e0 else {
       // one extra |edges|-sized exchange at build time (read from the
-      // cache, written once) buys every iteration join/aggregate the
+      // pin, written once) buys every iteration join/aggregate the
       // adaptive layout — the SHUFFLE_HASH joins need e's partitioning
       // to MATCH the iteration exchanges' count or they re-exchange
       // the edge list every step
-      val r = e0.repartition(p, col("src"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      r.count()
-      e0.unpersist()
+      val r = Shared.pin(e0.repartition(p, col("src")))
+      Shared.release(e0)
       r
     }
     // The session conf steers every exchange the iteration plan makes
     // (contribution aggregate, node distinct); restored in the finally
-    // after the final ranks are MATERIALIZED inside iterateAndRelease,
-    // so no plan of this build executes under the caller's conf.
+    // after the final ranks are PINNED, so no plan of this build
+    // executes under the caller's conf.
     spark.conf.set("spark.sql.shuffle.partitions", p.toString)
     try {
-      val nodes = e.select(col("src").as("node"))
-        .union(e.select(col("dst").as("node"))).distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      nodes.count()
-      iterateAndRelease(e, nodes, iterations, dampNum, dampDen, scale,
-        checkpointEvery, epsilonMicro = 0L)
+      val nodes = Shared.pin(e.select(col("src").as("node"))
+        .union(e.select(col("dst").as("node"))).distinct())
+      val ranks = iterate(e, nodes, iterations, dampNum, dampDen, scale,
+        checkpointEvery, epsilonMicro = 0L, pinLast = true)
+      // the final ranks are pinned, so nothing recomputes through these
+      Shared.release(e)
+      Shared.release(nodes)
+      ranks
     } finally spark.conf.set("spark.sql.shuffle.partitions", prevConf)
   }
 
@@ -240,17 +237,19 @@ object Graph {
   }
 
   /** PageRank served off a prebuilt [[ensureEdgeTable]] pair: reads
-    * `(src, dst, __od)` and `<table>_nodes`, pins both, and pays only
-    * the iterations — ~0.15 s per step at sf0.1 where the ad-hoc
-    * build costs ~9 s. The edge table's `src` bucketing IS the join
-    * distribution, so the pinned scan needs no shuffle (pass
+    * `(src, dst, __od)` and `<table>_nodes`, pins the edge list, and
+    * pays only the iterations — ~0.15 s per step at sf0.1 where the
+    * ad-hoc build costs ~9 s. The returned ranks are lazy: the steps
+    * after the last `checkpointEvery` pin run inside the caller's
+    * query, which reads them once. The edge table's `src` bucketing
+    * IS the join distribution, so the pinned scan needs no shuffle (pass
     * `repartitionEdges = true` for an external table that was not
     * written bucketed — without it such a table re-exchanges the
     * whole edge list inside EVERY iteration). With `epsilonMicro > 0`
     * the loop becomes a CONVERGED run: it stops at the first
     * iteration whose largest per-node rank change is ≤ `epsilonMicro`
     * micro-units (or at `iterations`, whichever comes first).
-    * Convergence checking persists and compares every step (one extra
+    * Convergence checking pins and compares every step (one extra
     * |nodes|-row integer aggregate per step) — leave it 0 to replay a
     * fixed unroll bit-for-bit. */
   def pageRankMicroFromTable(spark: SparkSession, table: String,
@@ -261,22 +260,21 @@ object Graph {
                              epsilonMicro: Long = 0L,
                              repartitionEdges: Boolean = false): DataFrame = {
     val scan = spark.table(table)
-    val e = (if (repartitionEdges) scan.repartition(col("src")) else scan)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = spark.table(table + "_nodes")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    iterateAndRelease(e, nodes, iterations, dampNum, dampDen, scale,
-      checkpointEvery, epsilonMicro)
+    val e = Shared.pin(if (repartitionEdges) scan.repartition(col("src")) else scan)
+    iterate(e, spark.table(table + "_nodes"), iterations, dampNum, dampDen,
+      scale, checkpointEvery, epsilonMicro, pinLast = false)
   }
 
-  /** The shared synchronous-iteration loop. Takes ownership of the
-    * persisted `e`/`nodes` scratch frames and releases them after the
-    * final ranks are materialized. */
-  private def iterateAndRelease(e: DataFrame, nodes: DataFrame,
-                                iterations: Int, dampNum: Long,
-                                dampDen: Long, scale: Long,
-                                checkpointEvery: Int,
-                                epsilonMicro: Long): DataFrame = {
+  /** The shared synchronous-iteration loop over the edge list `e` and
+    * node list `nodes`. Rank frames are pinned every `checkpointEvery`
+    * steps (every step when converging, and the last one with
+    * `pinLast`), each releasing the one before; the returned ranks
+    * read `e` and `nodes` unless they are pinned. */
+  private def iterate(e: DataFrame, nodes: DataFrame,
+                      iterations: Int, dampNum: Long,
+                      dampDen: Long, scale: Long,
+                      checkpointEvery: Int,
+                      epsilonMicro: Long, pinLast: Boolean): DataFrame = {
     require(iterations >= 0, s"iterations must be >= 0, got $iterations")
     require(dampDen > 0 && dampNum >= 0 && dampNum <= dampDen,
       s"damping must satisfy 0 <= dampNum <= dampDen, got $dampNum/$dampDen")
@@ -287,14 +285,11 @@ object Graph {
 
     val n = nodes.count()
     require(n > 0, "pageRank needs a non-empty edge list")
-    e.count() // materialize the edge cache before iterating
     val base = scale * (dampDen - dampNum) / (dampDen * n)
     val r0 = scale / n
 
     var ranks = nodes.withColumn("rank_micro", lit(r0))
-    var persisted: Option[DataFrame] = None
-    // convergence checking needs CONSECUTIVE iterations materialized
-    val every = if (epsilonMicro > 0) 1 else checkpointEvery
+    var pinned: Option[DataFrame] = None
     var i = 0
     var converged = false
     while (i < iterations && !converged) {
@@ -304,13 +299,13 @@ object Graph {
       // Join strategies are pinned (guide §3.1, deliberate choice):
       // both per-iteration joins carry a SHUFFLE_HASH hint. Without
       // it the static planner put a SortMergeJoin here, which re-
-      // SORTED the full cached edge list on src EVERY iteration
+      // SORTED the full pinned edge list on src EVERY iteration
       // (|edges| log |edges| per step — the edge list is static!),
       // and broadcast the contribution frame in the rank update —
       // wrong at scale, where contribs is |nodes|-sized and a
       // broadcast would OOM the driver. With the hints: prev is
       // already HashPartitioning(node) (it is the previous update
-      // join's stream side), e's cache holds HashPartitioning(src)
+      // join's stream side), the pinned e holds HashPartitioning(src)
       // from the build, contribs aggregates into
       // HashPartitioning(node) — so each iteration's only exchange
       // is the contribution SUM's, the PageRank minimum. The hash
@@ -330,9 +325,9 @@ object Graph {
         .select(col("node"),
           (lit(base) + coalesce(col("__m"), lit(0L))).as("rank_micro"))
       i += 1
-      if (i % every == 0 || i == iterations) {
-        val next = ranks.persist(StorageLevel.MEMORY_AND_DISK)
-        next.count() // materialize BEFORE releasing the frame it reads
+      // convergence checking needs CONSECUTIVE iterations materialized
+      if (epsilonMicro > 0 || (if (i == iterations) pinLast else i % checkpointEvery == 0)) {
+        val next = Shared.pin(ranks) // BEFORE releasing the frame it reads
         if (epsilonMicro > 0) {
           // largest per-node step delta, in exact integer micro-units
           val delta = next.as("a")
@@ -341,22 +336,12 @@ object Graph {
             .head().getLong(0)
           converged = delta <= epsilonMicro
         }
-        persisted.foreach(_.unpersist())
-        persisted = Some(next)
+        pinned.foreach(Shared.release)
+        pinned = Some(next)
         ranks = next
       }
     }
-    // iterations == 0 returns the uniform init — persist + materialize
-    // it too, so the scratch frames can be released uniformly below
-    if (persisted.isEmpty) {
-      ranks = ranks.persist(StorageLevel.MEMORY_AND_DISK)
-      ranks.count()
-    }
-    // release the scratch caches: the final ranks are materialized, so
-    // nothing recomputes through these. The returned (persisted) frame
-    // is the caller's to unpersist.
-    e.unpersist()
-    nodes.unpersist()
-    ranks
+    // iterations == 0 returns the uniform init
+    if (pinLast && iterations == 0) Shared.pin(ranks) else ranks
   }
 }

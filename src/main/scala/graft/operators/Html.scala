@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Shared
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -985,12 +986,11 @@ object Html {
         col(htmlCol).as("__html"))
       .groupBy("doc_id")
       .agg(first(col("__url")).as("__url"), first(col("__html")).as("__html"))
-    val fresh =
-      (if (!spark.catalog.tableExists(markers)) incoming
-       else incoming.join(spark.table(markers).select(col("doc_id")),
-         Seq("doc_id"), "left_anti"))
-        .persist() // two consumers: the postings job + the marker job
-    try {
+    Shared.scope {
+      val fresh = Shared.pin( // two consumers: the postings job + the marker job
+        if (!spark.catalog.tableExists(markers)) incoming
+        else incoming.join(spark.table(markers).select(col("doc_id")),
+          Seq("doc_id"), "left_anti"))
       val n = fresh.count()
       if (n == 0L) return 0L
       val edges = anchorTextEdges(fresh, "doc_id", "__url", "__html")
@@ -1012,7 +1012,7 @@ object Html {
           .write.mode("append").saveAsTable(markers)
       }
       n
-    } finally fresh.unpersist()
+    }
   }
 
   /** The [[anchorProfile]] aggregate served off a standing

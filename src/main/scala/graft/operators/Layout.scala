@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Shared
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -187,11 +188,11 @@ object Layout {
               new org.apache.hadoop.fs.Path(path)).toString)
             .parquet(freshFiles: _*),
           statsCols))
-    // the new manifest's lineage reads the old manifest files — cut it
-    // (|files| rows) before overwriting them
-    val materialized = refreshed.localCheckpoint()
-    try materialized.write.mode("overwrite").parquet(mPath.toString)
-    finally materialized.unpersist()
+    // the new manifest's lineage reads the old manifest files — pin it
+    // (|files| rows, lineage cut) before overwriting them
+    Shared.scope {
+      Shared.pin(refreshed).write.mode("overwrite").parquet(mPath.toString)
+    }
   }
 
   /** Scan only the files whose manifest box can overlap the given

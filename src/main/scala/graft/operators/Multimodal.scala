@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Shared
 import java.awt.RenderingHints
 import java.awt.image.BufferedImage
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
@@ -473,10 +474,8 @@ object Multimodal {
     // Round-17: pin the keyframe-hash frame — it feeds the banding
     // plus BOTH per-video count join-backs, and without the pin the
     // MJPEG demux + JPEG decode + dHash kernel re-ran once per branch
-    // (4× per call measured at sf0.1). Narrow (id, index, hash) rows;
-    // released with the session cache.
-    val fh = videoKeyframeHashes(media, everyN)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // (4× per call measured at sf0.1). Narrow (id, index, hash) rows.
+    val fh = Shared.pin(videoKeyframeHashes(media, everyN))
     val counts = fh.groupBy(col("media_id")).agg(count(lit(1)).as("__nf"))
     // (video, frame) struct ids order lexicographically, so the
     // banding's doc_a < doc_b already yields video_a <= video_b

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Shared
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -233,16 +234,15 @@ object Retrieval {
     val incoming = docs
       .select(col(idCol).as("doc_id"), col(textCol).as("__text"))
       .groupBy("doc_id").agg(first(col("__text")).as("__text"))
-    // tokenize ONCE into the persisted frame — postings and dl rows
+    // tokenize ONCE into the pinned frame — postings and dl rows
     // both derive from the same token column, so the CPU-heaviest
     // kernel runs one pass per doc, not two
-    val fresh =
-      (if (!spark.catalog.tableExists(dlTable)) incoming
-       else incoming.join(spark.table(dlTable).select(col("doc_id")),
-         Seq("doc_id"), "left_anti"))
-        .select(col("doc_id"), tokensOf("__text").as("__toks"))
-        .persist() // two consumers: postings job + dl-marker job
-    try {
+    Shared.scope {
+      val fresh = Shared.pin( // two consumers: postings job + dl-marker job
+        (if (!spark.catalog.tableExists(dlTable)) incoming
+         else incoming.join(spark.table(dlTable).select(col("doc_id")),
+           Seq("doc_id"), "left_anti"))
+          .select(col("doc_id"), tokensOf("__text").as("__toks")))
       val n = fresh.count()
       if (n == 0L) return 0L
       val postings = termStatsFromTokens(fresh) // the ONE postings shape
@@ -267,7 +267,7 @@ object Retrieval {
           .write.mode("append").saveAsTable(dlTable)
       }
       n
-    } finally fresh.unpersist()
+    }
   }
 
   /** BM25 served straight off the streaming pair: `df` derives from

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Shared
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -866,9 +867,9 @@ object Similarity {
     // round-18: the cell self-join references the assigned frame from
     // both sides and Spark re-executes the common subplan per side —
     // the corpus scan + nearest-cell kernel ran twice per call.
-    // localCheckpoint materializes it once (raw partitions, no columnar
-    // cache barrier — the q31 discipline).
-    val assigned = ivfAssign(corpus, idCol, vecCol, centroids).localCheckpoint()
+    // Pinning materializes it once (raw partitions, no columnar cache
+    // barrier — the q31 discipline).
+    val assigned = Shared.pin(ivfAssign(corpus, idCol, vecCol, centroids))
     val a = assigned.select(col("cell"), col("corpus_id").as("id_a"),
       col("cvec").as("vec_a"))
     val b = assigned.select(col("cell"), col("corpus_id").as("id_b"),

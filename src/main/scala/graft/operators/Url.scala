@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Shared
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -330,7 +331,7 @@ object Url {
     * drops it and frontiers its terminal instead.
     *
     * Scale shape: `maxHops` self-joins of the pointer frame against
-    * the (persisted) redirect map on the current-target key —
+    * the (pinned) redirect map on the current-target key —
     * pointer-jumping bounded by the cap, each step one hash join +
     * no aggregation; nothing driver-side. Chains in real captures are
     * short (1-3); the cap is a guard, not a work estimate. Battery
@@ -344,11 +345,10 @@ object Url {
     // out multiplicatively at every hop and emit several rows per
     // source — a real capture re-fetches URLs across days, so the
     // conflict is the norm, not the exception
-    val edges = redirects
+    val edges = Shared.pin(redirects
       .select(col(srcCol).as("__e_src"), col(dstCol).as("__e_dst"))
       .na.drop()
-      .groupBy("__e_src").agg(min(col("__e_dst")).as("__e_dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .groupBy("__e_src").agg(min(col("__e_dst")).as("__e_dst")))
     var state = edges.select(col("__e_src").as("url"),
       col("__e_dst").as("cur"), lit(1).as("hops"), lit(false).as("done"))
     var i = 1
@@ -364,16 +364,14 @@ object Url {
     }
     // one final probe: a row still pointing at a redirect source
     // after maxHops steps is looping (or absurdly deep — same verdict)
-    val out = state.join(edges.select(col("__e_src")),
+    val out = Shared.pin(state.join(edges.select(col("__e_src")),
         state("cur") === col("__e_src"), "left")
       .select(col("url"),
         when(col("done") || col("__e_src").isNull, col("cur"))
           .otherwise(lit(null).cast("string")).as("terminal_url"),
         col("hops"),
-        (!col("done") && col("__e_src").isNotNull).as("looped"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count() // materialize, then release the scratch map it read
-    edges.unpersist()
-    out // the caller owns the returned frame's unpersist
+        (!col("done") && col("__e_src").isNotNull).as("looped")))
+    Shared.release(edges) // the pinned result no longer reads it
+    out
   }
 }

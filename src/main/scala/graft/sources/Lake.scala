@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.Shared
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -77,27 +78,21 @@ object Lake {
     * `_quarantined` with every data field null — so
     * `n_parsed + n_quarantined == n_lines` always holds (spec-pinned)
     * and the bad lines can be shipped to a dead-letter dir intact for
-    * replay. With `cache = true` (the default) the frame is cached
-    * before returning: Spark refuses corrupt-record-only projections
-    * on an uncached raw-file scan (documented engine limitation), and
-    * the audit query that groups by `_quarantined IS NULL` is exactly
-    * such a projection. THE CALLER OWNS THE UNPERSIST — pass
-    * `cache = false` to skip pinning when the downstream plan keeps a
-    * data column in every projection (then the engine limitation never
-    * bites and nothing is pinned in executor storage).
-    * Battery q106 oracles the split on deterministically injected
-    * truncated lines. */
+    * replay. The frame is pinned ([[graft.Shared.pin]]) before
+    * returning: Spark refuses corrupt-record-only projections on a
+    * raw-file scan (documented engine limitation), and the audit query
+    * that groups by `_quarantined IS NULL` is exactly such a
+    * projection. Battery q106 oracles the split on deterministically
+    * injected truncated lines. */
   def readBronzeQuarantine(spark: SparkSession, path: String,
-                           schema: StructType,
-                           cache: Boolean = true): DataFrame = {
+                           schema: StructType): DataFrame = {
     val withCorrupt = new StructType(
       (schema.fields :+ org.apache.spark.sql.types.StructField(
         "_quarantined", org.apache.spark.sql.types.StringType)))
-    val raw = spark.read.schema(withCorrupt)
+    Shared.pin(spark.read.schema(withCorrupt)
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_quarantined")
-      .json(path)
-    if (cache) raw.cache() else raw
+      .json(path))
   }
 
   /** Ship a [[readBronzeQuarantine]] frame's malformed lines to a
@@ -113,9 +108,9 @@ object Lake {
     * channel accumulates); pass "overwrite" for idempotent batch
     * re-runs. Returns the number of dead letters written.
     *
-    * Pass the CACHED frame [[readBronzeQuarantine]] returns (its
-    * default): this write is precisely the corrupt-record-only
-    * projection the engine disallows on an uncached raw-file scan. */
+    * Pass the pinned frame [[readBronzeQuarantine]] returns: this write
+    * is precisely the corrupt-record-only projection the engine
+    * disallows on a raw-file scan. */
   def writeDeadLetter(quarantined: DataFrame, path: String,
                       mode: String = "append"): Long = {
     val bad = quarantined.filter(col("_quarantined").isNotNull)

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.Shared
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1263,10 +1264,10 @@ object Warc {
     val fresh = files.filterNot(f =>
       known.contains(f._1.substring(f._1.lastIndexOf('/') + 1)))
     if (fresh.isEmpty) return 0L
-    // persisted ONCE for its two consumers (the row append and the
+    // pinned ONCE for its two consumers (the row append and the
     // marker counts) so the segments are walked exactly once per absorb
-    val idx = cdxIndexFiles(spark, fresh).persist()
-    try {
+    Shared.scope {
+      val idx = Shared.pin(cdxIndexFiles(spark, fresh))
       if (!tableExists) {
         Warehouse.clearOrphanLocation(spark, table)
         idx.write.saveAsTable(table)
@@ -1298,7 +1299,7 @@ object Warc {
           .write.mode("append").saveAsTable(segTable)
       }
       fresh.length.toLong
-    } finally idx.unpersist()
+    }
   }
 
   /** Serve records by CDX rows with RANGED reads — the consumer half

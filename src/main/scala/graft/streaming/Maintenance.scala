@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Shared
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -94,13 +95,13 @@ object Maintenance {
   /** The micro-batch loop under every `streamingX` below: a
     * checkpointed `foreachBatch` that skips empty micro-batches and
     * hands each non-empty one, with its batch id (the ledgered merges'
-    * replay key), to `absorb`. */
+    * replay key), to `absorb`, releasing whatever `absorb` pinned. */
   private def eachBatch(stream: DataFrame, checkpoint: String)(
       absorb: (DataFrame, Long) => Unit): StreamingQuery =
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty) absorb(batch.toDF(), batchId)
+        if (!batch.isEmpty) Shared.scope(absorb(batch.toDF(), batchId))
       }
       .start()
 
@@ -207,12 +208,12 @@ object Maintenance {
       // Spark lists the table's files before the commit in the happy
       // path, a stage retry AFTER a partial commit could re-list and
       // observe its own output (re-deriving an empty delta mid-write).
-      // localCheckpoint severs the lineage at a |batch vocab|-bounded
-      // frame, so the append's input is fixed before any file lands.
-      val delta = toks.join(spark.table(tokensTable), Seq("t"), "left_anti")
-        .localCheckpoint(true)
-      try delta.write.mode("append").saveAsTable(tokensTable)
-      finally delta.unpersist()
+      // Pinning severs the lineage at a |batch vocab|-bounded frame, so
+      // the append's input is fixed before any file lands.
+      Shared.scope {
+        Shared.pin(toks.join(spark.table(tokensTable), Seq("t"), "left_anti"))
+          .write.mode("append").saveAsTable(tokensTable)
+      }
     }
   }
 

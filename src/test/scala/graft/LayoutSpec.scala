@@ -234,4 +234,16 @@ class LayoutSpec extends SparkSpec {
     assert(norm(man) == norm(rebuilt),
       "partition-column stats after refresh diverged from a full rebuild")
   }
+
+  test("refreshManifestDirs releases the manifest frame it pins") {
+    val dir = graft.sources.Scratch.dir("graft_mrelease").toString + "/lake"
+    Seq((1L, 10L, "a"), (2L, 20L, "b")).toDF("id", "v", "part")
+      .write.partitionBy("part").parquet(dir)
+    Layout.writeManifest(spark, dir, Seq("id", "v"))
+    Seq((3L, 30L)).toDF("id", "v").write.mode("append").parquet(s"$dir/part=a")
+    val before = persistedRdds
+    Layout.refreshManifestDirs(spark, dir, Seq(s"$dir/part=a"))
+    assert((persistedRdds -- before).isEmpty, "refresh left its pin stored")
+    assert(Layout.readManifest(spark, dir).count() == 3L)
+  }
 }

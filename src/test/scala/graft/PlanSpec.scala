@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Plan-shape regression net: the properties that make the battery
   * scale-safe, asserted on the physical plans so a refactor that
@@ -11,6 +13,35 @@ class PlanSpec extends SparkSpec {
 
   private def plan(q: String): String =
     SparkEntry.queries(q)(spark, dir).queryExecution.executedPlan.toString
+
+  /** [[plan]] followed by the executed plans of the frames `q` pinned
+    * while it was built (each [[Shared.pin]] runs as one
+    * `localCheckpoint` action), so a property of a pinned subplan stays
+    * assertable although the query's own plan only scans the pin. */
+  private def planWithPins(q: String): String = Shared.scope {
+    val pins = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val marker = s"plan_marker_${System.nanoTime()}"
+    @volatile var drained = false
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+                             durationNs: Long): Unit =
+        if (funcName == "localCheckpoint") pins.add(qe.executedPlan.toString)
+        else if (qe.executedPlan.toString.contains(marker)) drained = true
+      override def onFailure(funcName: String, qe: QueryExecution,
+                             exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val p = plan(q)
+      // listener delivery is async but ordered: once the marker query
+      // is seen, every pin made before it has been delivered
+      spark.range(1).select(lit(marker)).collect()
+      val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
+      while (!drained && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(drained, "query listener never delivered the marker")
+      (p +: pins.toArray(Array.empty[String]).toSeq).mkString("\n")
+    } finally spark.listenerManager.unregister(listener)
+  }
 
   test("q01: the shipdate filter reaches the parquet scan") {
     val p = plan("q01_scan_project")
@@ -70,25 +101,23 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q22b: every sketch consumer reads the persisted frame, not the kernel") {
-    val df = SparkEntry.queries("q22b_minhash_persisted")(spark, dir)
-    try {
+    Shared.scope {
+      val df = SparkEntry.queries("q22b_minhash_persisted")(spark, dir)
       val p = df.queryExecution.executedPlan.toString
       // band self-join (both sides) + two pair branches = four
-      // cached-scan consumers; the sketch UDF cannot re-run per branch
-      val cacheScans = "InMemoryTableScan".r.findAllIn(p).size
-      assert(cacheScans >= 3, p.take(1200))
-      // every parquet scan in the print belongs to a cache build recipe
-      // (each InMemoryRelation prints its two-scan union child); a
-      // consumer bypassing the cache would add scans beyond that
-      assert("FileScan parquet".r.findAllIn(p).size ==
-        2 * "InMemoryRelation".r.findAllIn(p).size,
-        "a branch bypassed the cache:\n" + p.take(1200))
+      // pinned-scan consumers; the sketch UDF cannot re-run per branch
+      val pinScans = "Scan ExistingRDD".r.findAllIn(p).size
+      assert(pinScans >= 3, p.take(1200))
+      // a pin prints no build recipe (its lineage is cut), so every
+      // parquet scan in the print would be a consumer bypassing the pin
+      assert("FileScan parquet".r.findAllIn(p).size == 0,
+        "a branch bypassed the pin:\n" + p.take(1200))
       // and the compute-once path returns exactly the one-shot pairs
       val pairs = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
       val oneShot = SparkEntry.queries("q22_minhash_dedup")(spark, dir)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-      assert(pairs == oneShot, s"persisted=${pairs.size} oneShot=${oneShot.size}")
-    } finally spark.sharedState.cacheManager.clearCache()
+      assert(pairs == oneShot, s"pinned=${pairs.size} oneShot=${oneShot.size}")
+    }
   }
 
   test("q31b: the serve side reads index tables — no gram kernel, no corpus scan") {
@@ -197,7 +226,7 @@ class PlanSpec extends SparkSpec {
     assert("Window".r.findAllIn(p145).size == 1,
       "assembly must aggregate, not window:\n" + p145.take(1200))
     // q148's winner selection is ONE partially-combined max aggregate
-    val p148 = plan("q148_latest_capture")
+    val p148 = planWithPins("q148_latest_capture")
     assert(p148.contains("partial_max") || p148.contains("partial_finalmerge"),
       "latestCaptures lost its map-side combine:\n" + p148.take(1200))
     // q149: the apex budget flows through the bounded best-k aggregator
@@ -328,7 +357,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q114: host PageRank from raw HTML keeps the q95 aggregation shape") {
-    val p = plan("q114_host_pagerank")
+    val p = planWithPins("q114_host_pagerank")
     assert(!p.contains("CartesianProduct") && !p.contains("Window"), p.take(800))
     assert(p.contains("partial_sum"), "contribution SUM lost its map-side combine")
   }
@@ -416,7 +445,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q95: PageRank steps are joins + partial-combined SUM exchanges, no cartesian") {
-    val p = plan("q95_pagerank")
+    val p = planWithPins("q95_pagerank")
     assert(!p.contains("CartesianProduct"), "PageRank grew a cartesian")
     assert(!p.contains("Window"), "PageRank ranks through a window")
     // the per-iteration dst aggregation must combine map-side

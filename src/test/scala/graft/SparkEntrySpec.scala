@@ -19,9 +19,17 @@ class SparkEntrySpec extends SparkSpec {
 
   test("every query runs and yields rows at sf0.001") {
     val dir = "/root/testdata/sf0.001"
+    // other suites' fixtures cache frames in this shared session; the
+    // battery itself must add none
+    spark.catalog.clearCache()
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      val n = fn(spark, dir).count()
+      val before = persistedRdds
+      val n = Shared.scope(fn(spark, dir).count())
       assert(n > 0, s"$name returned 0 rows at sf0.001")
+      // every frame the query materialized is released with its scope
+      val leaked = persistedRdds -- before
+      assert(leaked.isEmpty, s"$name left ${leaked.size} persisted RDDs behind")
+      assert(spark.sharedState.cacheManager.isEmpty, s"$name left a cache entry")
     }
   }
 

@@ -20,4 +20,7 @@ trait SparkSpec extends AnyFunSuite {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Ids of the RDDs whose blocks the session holds stored. */
+  def persistedRdds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
 }

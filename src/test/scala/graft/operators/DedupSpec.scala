@@ -261,6 +261,24 @@ class DedupSpec extends SparkSpec {
     } finally dropAll()
   }
 
+  test("appendToNgramIndex releases the delta frames it pins") {
+    val tbl = Dedup.NgramIncrTables("graft_test_rel_inv", "graft_test_rel_df",
+      "graft_test_rel_pinv", "graft_test_rel_cands")
+    def dropAll(): Unit = Seq(tbl.inv, tbl.dfreq, tbl.pinv, tbl.cands)
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    dropAll()
+    try {
+      Dedup.ensureNgramIndexIncr(spark, corpus.filter($"doc_id" % 2 === 0),
+        "doc_id", "text", tbl)
+      val pinv0 = spark.table(tbl.pinv).count()
+      val before = persistedRdds
+      Dedup.appendToNgramIndex(spark, corpus.filter($"doc_id" % 2 === 1),
+        "doc_id", "text", tbl)
+      assert((persistedRdds -- before).isEmpty, "append left its pins stored")
+      assert(spark.table(tbl.pinv).count() > pinv0, "the delta was not appended")
+    } finally dropAll()
+  }
+
   test("decontamination: overlap pairs exact, eval side broadcast, filter drops flagged only") {
     // eval doc e1 shares the 4-gram "alpha beta gamma delta" with t1
     // (case/punct variant — the gram discipline normalizes), e2 shares

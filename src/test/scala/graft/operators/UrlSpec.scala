@@ -197,10 +197,10 @@ class UrlSpec extends SparkSpec {
       ("https://d.com/self", "https://d.com/self"), // self-redirect
       ("https://e.com/one", "https://e.com/done")   // single hop
     ).toDF("src", "dst")
-    val got = Url.resolveRedirectChains(redirects, "src", "dst", maxHops = 3)
-    val rows = got.as[(String, String, Int, Boolean)].collect()
-      .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
-    got.unpersist()
+    val rows = graft.Shared.scope(
+      Url.resolveRedirectChains(redirects, "src", "dst", maxHops = 3)
+        .as[(String, String, Int, Boolean)].collect()
+        .map(r => r._1 -> ((r._2, r._3, r._4))).toMap)
     // the 3-hop chain lands exactly at the cap — resolved, not looped
     assert(rows("https://a.com/1") == (("https://b.com/t", 3, false)))
     // mid-chain sources are rows too, with their own shorter walks
@@ -219,9 +219,9 @@ class UrlSpec extends SparkSpec {
       ("https://a.com/x", "https://a.com/new2"),
       ("https://a.com/x", "https://a.com/new1"),
       ("https://a.com/new1", "https://a.com/t")).toDF("src", "dst")
-    val got = Url.resolveRedirectChains(redirects, "src", "dst", maxHops = 4)
-    val rows = got.as[(String, String, Int, Boolean)].collect().sortBy(_._1)
-    got.unpersist()
+    val rows = graft.Shared.scope(
+      Url.resolveRedirectChains(redirects, "src", "dst", maxHops = 4)
+        .as[(String, String, Int, Boolean)].collect().sortBy(_._1))
     assert(rows.count(_._1 == "https://a.com/x") == 1, rows.mkString)
     assert(rows.toSeq == Seq(
       ("https://a.com/new1", "https://a.com/t", 1, false),

@@ -409,13 +409,11 @@ class MaintenanceSpec extends SparkSpec {
     // served ranks == ranks off a one-shot ensureEdgeTable build
     graft.operators.Graph.ensureEdgeTable(spark,
       all.toDF("src", "dst"), "src", "dst", ref, buckets = 4)
-    val streamedDf = graft.operators.Graph
-      .pageRankMicroFromTable(spark, tbl, iterations = 3)
-    val oneShotDf = graft.operators.Graph
-      .pageRankMicroFromTable(spark, ref, iterations = 3)
-    val streamed = streamedDf.as[(Long, Long)].collect().sortBy(_._1).toSeq
-    val oneShot = oneShotDf.as[(Long, Long)].collect().sortBy(_._1).toSeq
-    streamedDf.unpersist(); oneShotDf.unpersist()
+    def ranks(t: String) = graft.Shared.scope(graft.operators.Graph
+      .pageRankMicroFromTable(spark, t, iterations = 3)
+      .as[(Long, Long)].collect().sortBy(_._1).toSeq)
+    val streamed = ranks(tbl)
+    val oneShot = ranks(ref)
     assert(streamed == oneShot, "streamed table served different ranks")
     dropGraph(tbl); dropGraph(ref)
   }
@@ -499,12 +497,11 @@ class MaintenanceSpec extends SparkSpec {
       s"bucket spec lost through the swap: $spec")
     // and the serve plan reads the swapped table with its map-side
     // combine intact — the q95b PlanSpec shape on the STREAMED table
-    val served = graft.operators.Graph
+    val p = graft.Shared.scope(graft.operators.Graph
       .pageRankMicroFromTable(spark, tbl, iterations = 1)
-    val p = served.queryExecution.executedPlan.toString
+      .queryExecution.executedPlan.toString)
     assert(p.contains("partial_sum"),
       "contribution SUM lost its map-side combine on the streamed table")
-    served.unpersist()
     dropGraph(tbl)
   }
 
@@ -585,6 +582,21 @@ class MaintenanceSpec extends SparkSpec {
     assert(after._1.count(t => t._1 == "e" && t._2 == "f") == 1 &&
         after._1.find(t => t._1 == "e" && t._2 == "f").get._3 == 1L,
       "redelivery double-merged the stamped bigram batch")
+    dropLm(bigT, tokT)
+  }
+
+  test("absorbBigramBatch releases the token delta it pins") {
+    val (bigT, tokT) = ("graft_maint_lm_release_big", "graft_maint_lm_release_tok")
+    dropLm(bigT, tokT)
+    Maintenance.absorbBigramBatch(spark, Seq((1L, "a b a")).toDF("doc_id", "text"),
+      "doc_id", "text", bigT, tokT, 0L)
+    val tokens0 = spark.table(tokT).count()
+    val before = persistedRdds
+    // the tokens table exists now, so the novel-token delta is pinned
+    Maintenance.absorbBigramBatch(spark, Seq((2L, "b c d")).toDF("doc_id", "text"),
+      "doc_id", "text", bigT, tokT, 1L)
+    assert((persistedRdds -- before).isEmpty, "absorb left its pin stored")
+    assert(spark.table(tokT).count() > tokens0, "the novel tokens were not appended")
     dropLm(bigT, tokT)
   }
 }
