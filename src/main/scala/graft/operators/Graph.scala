@@ -214,12 +214,8 @@ object Graph {
     try {
       val nodes = Shared.pin(e.select(col("src").as("node"))
         .union(e.select(col("dst").as("node"))).distinct())
-      val ranks = iterate(e, nodes, iterations, dampNum, dampDen, scale,
-        checkpointEvery, epsilonMicro = 0L, pinLast = true)
-      // the final ranks are pinned, so nothing recomputes through these
-      Shared.release(e)
-      Shared.release(nodes)
-      ranks
+      iterateAndRelease(e, nodes, iterations, dampNum, dampDen, scale,
+        checkpointEvery, epsilonMicro = 0L)
     } finally spark.conf.set("spark.sql.shuffle.partitions", prevConf)
   }
 
@@ -237,12 +233,10 @@ object Graph {
   }
 
   /** PageRank served off a prebuilt [[ensureEdgeTable]] pair: reads
-    * `(src, dst, __od)` and `<table>_nodes`, pins the edge list, and
-    * pays only the iterations — ~0.15 s per step at sf0.1 where the
-    * ad-hoc build costs ~9 s. The returned ranks are lazy: the steps
-    * after the last `checkpointEvery` pin run inside the caller's
-    * query, which reads them once. The edge table's `src` bucketing
-    * IS the join distribution, so the pinned scan needs no shuffle (pass
+    * `(src, dst, __od)` and `<table>_nodes`, pins both, and pays only
+    * the iterations — ~0.15 s per step at sf0.1 where the ad-hoc
+    * build costs ~9 s. The edge table's `src` bucketing IS the join
+    * distribution, so the pinned scan needs no shuffle (pass
     * `repartitionEdges = true` for an external table that was not
     * written bucketed — without it such a table re-exchanges the
     * whole edge list inside EVERY iteration). With `epsilonMicro > 0`
@@ -261,20 +255,19 @@ object Graph {
                              repartitionEdges: Boolean = false): DataFrame = {
     val scan = spark.table(table)
     val e = Shared.pin(if (repartitionEdges) scan.repartition(col("src")) else scan)
-    iterate(e, spark.table(table + "_nodes"), iterations, dampNum, dampDen,
-      scale, checkpointEvery, epsilonMicro, pinLast = false)
+    val nodes = Shared.pin(spark.table(table + "_nodes"))
+    iterateAndRelease(e, nodes, iterations, dampNum, dampDen, scale,
+      checkpointEvery, epsilonMicro)
   }
 
-  /** The shared synchronous-iteration loop over the edge list `e` and
-    * node list `nodes`. Rank frames are pinned every `checkpointEvery`
-    * steps (every step when converging, and the last one with
-    * `pinLast`), each releasing the one before; the returned ranks
-    * read `e` and `nodes` unless they are pinned. */
-  private def iterate(e: DataFrame, nodes: DataFrame,
-                      iterations: Int, dampNum: Long,
-                      dampDen: Long, scale: Long,
-                      checkpointEvery: Int,
-                      epsilonMicro: Long, pinLast: Boolean): DataFrame = {
+  /** The shared synchronous-iteration loop. Takes ownership of the
+    * pinned `e`/`nodes` scratch frames and releases them once the
+    * final ranks are pinned. */
+  private def iterateAndRelease(e: DataFrame, nodes: DataFrame,
+                                iterations: Int, dampNum: Long,
+                                dampDen: Long, scale: Long,
+                                checkpointEvery: Int,
+                                epsilonMicro: Long): DataFrame = {
     require(iterations >= 0, s"iterations must be >= 0, got $iterations")
     require(dampDen > 0 && dampNum >= 0 && dampNum <= dampDen,
       s"damping must satisfy 0 <= dampNum <= dampDen, got $dampNum/$dampDen")
@@ -290,6 +283,8 @@ object Graph {
 
     var ranks = nodes.withColumn("rank_micro", lit(r0))
     var pinned: Option[DataFrame] = None
+    // convergence checking needs CONSECUTIVE iterations materialized
+    val every = if (epsilonMicro > 0) 1 else checkpointEvery
     var i = 0
     var converged = false
     while (i < iterations && !converged) {
@@ -325,8 +320,7 @@ object Graph {
         .select(col("node"),
           (lit(base) + coalesce(col("__m"), lit(0L))).as("rank_micro"))
       i += 1
-      // convergence checking needs CONSECUTIVE iterations materialized
-      if (epsilonMicro > 0 || (if (i == iterations) pinLast else i % checkpointEvery == 0)) {
+      if (i % every == 0 || i == iterations) {
         val next = Shared.pin(ranks) // BEFORE releasing the frame it reads
         if (epsilonMicro > 0) {
           // largest per-node step delta, in exact integer micro-units
@@ -341,7 +335,12 @@ object Graph {
         ranks = next
       }
     }
-    // iterations == 0 returns the uniform init
-    if (pinLast && iterations == 0) Shared.pin(ranks) else ranks
+    // iterations == 0 returns the uniform init — pin it too, so the
+    // scratch frames can be released uniformly below
+    if (pinned.isEmpty) ranks = Shared.pin(ranks)
+    // the final ranks are pinned, so nothing recomputes through these
+    Shared.release(e)
+    Shared.release(nodes)
+    ranks
   }
 }

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.functions.{col, lit}
-import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.sql.functions.col
 
 /** Plan-shape regression net: the properties that make the battery
   * scale-safe, asserted on the physical plans so a refactor that
@@ -14,34 +12,9 @@ class PlanSpec extends SparkSpec {
   private def plan(q: String): String =
     SparkEntry.queries(q)(spark, dir).queryExecution.executedPlan.toString
 
-  /** [[plan]] followed by the executed plans of the frames `q` pinned
-    * while it was built (each [[Shared.pin]] runs as one
-    * `localCheckpoint` action), so a property of a pinned subplan stays
-    * assertable although the query's own plan only scans the pin. */
-  private def planWithPins(q: String): String = Shared.scope {
-    val pins = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val marker = s"plan_marker_${System.nanoTime()}"
-    @volatile var drained = false
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution,
-                             durationNs: Long): Unit =
-        if (funcName == "localCheckpoint") pins.add(qe.executedPlan.toString)
-        else if (qe.executedPlan.toString.contains(marker)) drained = true
-      override def onFailure(funcName: String, qe: QueryExecution,
-                             exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      val p = plan(q)
-      // listener delivery is async but ordered: once the marker query
-      // is seen, every pin made before it has been delivered
-      spark.range(1).select(lit(marker)).collect()
-      val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
-      while (!drained && System.nanoTime() < deadline) Thread.sleep(50)
-      assert(drained, "query listener never delivered the marker")
-      (p +: pins.toArray(Array.empty[String]).toSeq).mkString("\n")
-    } finally spark.listenerManager.unregister(listener)
-  }
+  /** [[plan]] followed by the plans of the frames `q` pinned. */
+  private def planWithPins(q: String): String =
+    planWithPins(SparkEntry.queries(q)(spark, dir))
 
   test("q01: the shipdate filter reaches the parquet scan") {
     val p = plan("q01_scan_project")
@@ -363,7 +336,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q95b: the serve plan reads the edge tables — no edge re-derivation") {
-    val p = plan("q95b_pagerank_serve")
+    val p = planWithPins("q95b_pagerank_serve")
     assert(!p.contains("CartesianProduct") && !p.contains("Window"), p.take(800))
     // serve scans the build-once bucketed tables …
     assert(p.contains("graft_q95b_edges_b32_"),
@@ -375,7 +348,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q95c: the streamed-graph serve reads the streamed edge tables — no edge re-derivation") {
-    val p = plan("q95c_pagerank_stream")
+    val p = planWithPins("q95c_pagerank_stream")
     assert(!p.contains("CartesianProduct") && !p.contains("Window"), p.take(800))
     assert(p.contains("graft_q95c_edges_"),
       "serve path does not read the streamed edge table:\n" + p.take(1200))

@@ -497,9 +497,8 @@ class MaintenanceSpec extends SparkSpec {
       s"bucket spec lost through the swap: $spec")
     // and the serve plan reads the swapped table with its map-side
     // combine intact — the q95b PlanSpec shape on the STREAMED table
-    val p = graft.Shared.scope(graft.operators.Graph
-      .pageRankMicroFromTable(spark, tbl, iterations = 1)
-      .queryExecution.executedPlan.toString)
+    val p = planWithPins(graft.operators.Graph
+      .pageRankMicroFromTable(spark, tbl, iterations = 1))
     assert(p.contains("partial_sum"),
       "contribution SUM lost its map-side combine on the streamed table")
     dropGraph(tbl)
