@@ -90,26 +90,47 @@ import java.util.concurrent.{Executors, TimeUnit, TimeoutException}
 object Bench {
   private val canaryAcc = new java.util.concurrent.atomic.AtomicLong(0L)
 
+  /** The session both legs measure in, warmed up by one q04 run (JIT,
+    * codegen and parquet footer caches), so the isolated leg sees the
+    * battery's compile regime. */
+  private def warmSession(appName: String, sfDir: String): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // Round-17 root-cause of the in-battery premium on the iterative
+    // family (q95* 1.7-2.1x over isolated): Spark's codegen cache is a
+    // STATIC conf defaulting to 100 entries, and the battery's ~200
+    // structurally distinct queries compile thousands of distinct
+    // fragments (measured: 50 battery queries = 1,256 compiles), so a
+    // query's generated classes are always evicted between its two
+    // passes — every in-battery attempt re-paid janino compilation +
+    // fresh-class JIT for each fragment (q95: 82 fragments x ~26 ms,
+    // plus the first-execution interpreter penalty), which the
+    // isolated child's warm-up attempt absorbs. 4096 entries retains
+    // the whole battery's fragments (measured: q95 post-50-query-churn
+    // 9.9 s -> 7.2 s, recompiles 80 -> 0, and the churn itself
+    // compiled 33% fewer fragments from cross-query sharing). Heap
+    // cost is bounded: entries hold source text + class refs,
+    // ~100-200 MB at 4096 against the 8 GB bench JVM.
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .appName(appName)
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    SparkEntry.queries.get("q04_lineitem_agg").foreach(f => f(spark, sfDir).count())
+    spark
+  }
+
   /** Child-JVM isolated measurement (see the isolated-figure note in
     * [[main]]): fresh session, q04 warm-up, min-of-2 back-to-back per
     * name with each attempt's pins released, emitted by the harness
     * itself so cross-round drift attribution ships in BENCH_r*.json
     * instead of ad-hoc scratch runs. Prints one `ISOLATED <name> <sec>` line per query. */
   private def isolatedChild(sfDir: String, names: Seq[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-bench-isolated")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // match the parent session's cache sizing (see main) so the
-      // isolated protocol measures the same compile regime
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    SparkEntry.queries.get("q04_lineitem_agg").foreach(f => f(spark, sfDir).count())
+    val spark = warmSession("graft-bench-isolated", sfDir)
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       def attempt(): Double = {
@@ -264,33 +285,8 @@ object Bench {
       return
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val timeoutSec = sys.env.getOrElse("SPARK_GRAFT_QUERY_TIMEOUT_SEC", "120").toLong
-    // Round-17 root-cause of the in-battery premium on the iterative
-    // family (q95* 1.7-2.1x over isolated): Spark's codegen cache is a
-    // STATIC conf defaulting to 100 entries, and the battery's ~200
-    // structurally distinct queries compile thousands of distinct
-    // fragments (measured: 50 battery queries = 1,256 compiles), so a
-    // query's generated classes are always evicted between its two
-    // passes — every in-battery attempt re-paid janino compilation +
-    // fresh-class JIT for each fragment (q95: 82 fragments x ~26 ms,
-    // plus the first-execution interpreter penalty), which the
-    // isolated child's warm-up attempt absorbs. 4096 entries retains
-    // the whole battery's fragments (measured: q95 post-50-query-churn
-    // 9.9 s -> 7.2 s, recompiles 80 -> 0, and the churn itself
-    // compiled 33% fewer fragments from cross-query sharing). Heap
-    // cost is bounded: entries hold source text + class refs,
-    // ~100-200 MB at 4096 against the 8 GB bench JVM.
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = warmSession("graft-bench", sfDir)
     val explain = sys.env.get("BENCH_EXPLAIN").contains("1")
     val pool = Executors.newCachedThreadPool()
 
@@ -307,9 +303,6 @@ object Bench {
     canarySec(itersPerThread = 50000000L) // untimed JIT warm-up of the canary loop
     val canaryBefore = canarySec()
     val ioBefore = ioProbeSec()
-
-    // warm-up: JIT + codegen + parquet footer caches
-    SparkEntry.queries.get("q04_lineitem_agg").foreach(f => f(spark, sfDir).count())
 
     /** One timed attempt of `name`; returns (seconds-or-negative,
       * stop-the-world GC seconds during the attempt). */

@@ -82,5 +82,8 @@ object Shared {
   private def stored(ds: Dataset[_]): Seq[RDD[_]] =
     ds.queryExecution.logical.collectLeaves().collect { case r: LogicalRDD => r.rdd }
 
-  private def free(rdd: RDD[_]): Unit = rdd.unpersist(blocking = false): Unit
+  // not RDD's unpersist: it warns, once per pin, that a local checkpoint
+  // cannot be recomputed, which is what a pin is
+  private def free(rdd: RDD[_]): Unit =
+    org.apache.spark.sql.graftbridge.ColumnBridge.freeRdd(rdd)
 }

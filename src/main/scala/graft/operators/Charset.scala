@@ -265,11 +265,6 @@ object Charset {
     (cs, clean)
   }
 
-  /** Column form of the decision alone: canonical charset label. */
-  def detect(body: Column, contentType: Column): Column =
-    udf((b: Array[Byte], ct: String) => detectKernel(b, ct))
-      .apply(body, contentType)
-
   /** Column form of decide+decode: `struct(charset, text)` — select
     * `.getField("text")` / `.getField("charset")`. */
   def decodeText(body: Column, contentType: Column): Column = {

@@ -20,9 +20,6 @@ import org.apache.spark.sql.functions._
   * against. All other tables read natively.
   */
 object Tables {
-  val names: Seq[String] = Seq("region", "nation", "customer", "supplier",
-    "part", "orders", "lineitem", "events", "documents", "embeddings")
-
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = name match {
     case "events" =>
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -40,8 +37,4 @@ object Tables {
     case other =>
       spark.read.parquet(s"$sfDir/$other.parquet")
   }
-
-  /** Register every table as a temp view for the SQL surface (S12/A8). */
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
-    names.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
 }

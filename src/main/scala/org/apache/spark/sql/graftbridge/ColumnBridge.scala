@@ -8,7 +8,7 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * Spark 4, so third-party native expressions need this one-hop shim in
   * the `org.apache.spark.sql` namespace (the conventional extension
   * pattern) to wrap a Catalyst `Expression` into a user-facing
-  * `Column`. Nothing else of Spark's internals is touched. */
+  * `Column`. The one other internal it touches is [[freeRdd]]. */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
@@ -23,4 +23,10 @@ object ColumnBridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry.registerFunction(
         org.apache.spark.sql.catalyst.FunctionIdentifier(name), info, builder)
+
+  /** Drop a stored RDD's blocks without waiting: the call RDD's own
+    * unpersist makes (`unpersistRDD` is `private[spark]`), minus the WARN
+    * it logs on every call for a locally checkpointed RDD. */
+  def freeRdd(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
 }

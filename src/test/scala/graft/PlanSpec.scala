@@ -94,7 +94,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q31b: the serve side reads index tables — no gram kernel, no corpus scan") {
-    val (invT, candT) = SparkEntry.ngramIndexTables(spark, dir)
+    val (invT, candT) = graft.battery.Common.ngramIndexTables(spark, dir)
     try {
       val df = SparkEntry.queries("q31b_ngram_persisted")(spark, dir)
       val p = df.queryExecution.executedPlan.toString
@@ -118,7 +118,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q54b: BM25 serves off the stats tables — no corpus scan, term filter pushed down") {
-    val (statsT, dfT, corpT) = SparkEntry.bm25Tables(spark, dir)
+    val (statsT, dfT, corpT) = graft.battery.DedupQueries.bm25Tables(spark, dir)
     try {
       val df = SparkEntry.queries("q54b_bm25_persisted")(spark, dir)
       val p = df.queryExecution.executedPlan.toString

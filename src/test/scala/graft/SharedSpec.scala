@@ -2,6 +2,11 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.{LogEvent, Logger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
+
 /** [[Shared]]'s contract: what a pin keeps, and when it is let go. */
 class SharedSpec extends SparkSpec {
   import spark.implicits._
@@ -67,6 +72,33 @@ class SharedSpec extends SparkSpec {
       assert(outer.count() == 20L)
     }
     assert((persistedRdds -- before).isEmpty, "outer scope kept its pin")
+  }
+
+  /** The WARN (or worse) messages Spark's RDD classes log while `body`
+    * runs, captured from the `org.apache.spark.rdd` logger tree. */
+  private def rddWarnings(body: => Unit): Seq[String] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("rdd-warnings", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN)) seen.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val logger = LogManager.getLogger("org.apache.spark.rdd").asInstanceOf[Logger]
+    logger.addAppender(capture)
+    try body
+    finally { logger.removeAppender(capture); capture.stop() }
+    import scala.jdk.CollectionConverters._
+    seen.asScala.toSeq
+  }
+
+  test("releasing a pin logs no WARN") {
+    val before = persistedRdds
+    val warnings = rddWarnings {
+      Shared.scope(Shared.pin(frame).count())
+      Shared.release(Shared.pin(frame))
+    }
+    assert((persistedRdds -- before).isEmpty, "a released pin stayed stored")
+    assert(warnings.isEmpty, s"release logged: ${warnings.mkString("; ")}")
   }
 
   test("no source file but Shared.scala materializes or releases a frame itself") {

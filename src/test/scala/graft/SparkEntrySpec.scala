@@ -13,8 +13,16 @@ class SparkEntrySpec extends SparkSpec {
   test("every oracle belongs to a query; names are stable q-prefixed keys") {
     val qs = SparkEntry.queries.keySet
     val os = SparkEntry.oracleSql.keySet
-    assert(os.subsetOf(qs), s"oracles without queries: ${os -- qs}")
+    assert(os == qs, s"oracles without queries: ${os -- qs}; queries without oracles: ${qs -- os}")
     assert(qs.forall(_.matches("q\\d{2,3}[a-z]?_[a-z0-9_]+")), qs.mkString(","))
+  }
+
+  test("a registry that defines a query name twice fails to assemble") {
+    val q = battery.Query("q01_x", (s, _) => s.range(1).toDF(), "SELECT 1 AS id")
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.assemble(Seq(q), Seq(battery.Query("q02_y", q.run, q.oracle)), Seq(q)))
+    assert(e.getMessage.contains("q01_x") && !e.getMessage.contains("q02_y"), e.getMessage)
+    assert(SparkEntry.assemble(Seq(q)) == Seq(q))
   }
 
   test("every query runs and yields rows at sf0.001") {
@@ -39,7 +47,7 @@ class SparkEntrySpec extends SparkSpec {
     var ckpt: String = null
     var qid: java.util.UUID = null
     def run(failAt: Long): Unit =
-      SparkEntry.streamRows(spark, (1L to 9L).toSeq) { (in, cp) =>
+      graft.battery.Common.streamRows(spark, (1L to 9L).toSeq) { (in, cp) =>
         ckpt = cp
         val q = in.writeStream.option("checkpointLocation", cp)
           .foreachBatch { (b: Dataset[Row], id: Long) =>
@@ -73,7 +81,7 @@ class SparkEntrySpec extends SparkSpec {
     val name = s"spec_derived_${System.nanoTime}"
     var builds = 0
     intercept[IllegalStateException] {
-      SparkEntry.ensureDerivedDir(spark, data, name) { stage =>
+      graft.battery.Common.ensureDerivedDir(spark, data, name) { stage =>
         builds += 1
         Files.write(Paths.get(stage, "half"), Array[Byte](1))
         throw new IllegalStateException("build failed")
@@ -83,13 +91,13 @@ class SparkEntrySpec extends SparkSpec {
     val mine = (f: java.io.File) => f.getName.startsWith(s"graft_${name}_")
     assert(tmp.listFiles().filter(mine).forall(_.getName.endsWith("_stage")),
       "a failed build published its dir")
-    val out = SparkEntry.ensureDerivedDir(spark, data, name) { stage =>
+    val out = graft.battery.Common.ensureDerivedDir(spark, data, name) { stage =>
       builds += 1
       Files.write(Paths.get(stage, "whole"), Array[Byte](2))
     }
     assert(builds == 2)
     assert(new java.io.File(out, "whole").exists() && !new java.io.File(out, "half").exists())
-    assert(SparkEntry.ensureDerivedDir(spark, data, name)(_ => builds += 1) == out)
+    assert(graft.battery.Common.ensureDerivedDir(spark, data, name)(_ => builds += 1) == out)
     assert(builds == 2, "a published dir was rebuilt")
     assert(tmp.listFiles().filter(mine).map(_.toString).toSeq == Seq(out))
     Scratch.deleteRecursively(new java.io.File(out))

@@ -605,7 +605,7 @@ class TextSpec extends SparkSpec {
     // is exactly the engineered one (fire classes) or none (passes)
     val expect = Text.GopherRepetitionRules.map(_._1)
       .flatMap(n => Seq(n, null))
-    SparkEntry.GopherFixtures.zip(expect).zipWithIndex.foreach {
+    graft.battery.CorpusQueries.GopherFixtures.zip(expect).zipWithIndex.foreach {
       case ((fx, want), cls) =>
         assert(rule(fx) == want, s"fixture class $cls")
     }
@@ -616,7 +616,7 @@ class TextSpec extends SparkSpec {
     // battery uses the struct + Column ladder — pin them equal over
     // all 26 fire/near-miss classes so a threshold or field-order
     // drift between the two forms can never ship
-    val df = SparkEntry.GopherFixtures.zipWithIndex
+    val df = graft.battery.CorpusQueries.GopherFixtures.zipWithIndex
       .map { case (t, i) => (i.toLong, t) }.toDF("cls", "text")
     df.select($"cls",
         Text.gopherFiredRule($"text").as("kernel"),
@@ -663,11 +663,11 @@ class TextSpec extends SparkSpec {
     // n_tokens(prefix) a geometry-exact assembleSftSequences boundary
     val ids = graft.operators.Bpe.tokenIds(
         df.select($"doc_id", $"rendered"), "doc_id", "rendered",
-        SparkEntry.CommittedBpeMerges)
+        graft.battery.CorpusQueries.CommittedBpeMerges)
       .select("token_ids").as[Seq[Long]].head()
     val pIds = graft.operators.Bpe.tokenIds(
         df.select($"doc_id", $"prefix"), "doc_id", "prefix",
-        SparkEntry.CommittedBpeMerges)
+        graft.battery.CorpusQueries.CommittedBpeMerges)
       .select("token_ids").as[Seq[Long]].head()
     assert(ids.startsWith(pIds) && ids.size > pIds.size,
       s"prefix ids must be a strict prefix: $pIds vs $ids")
@@ -701,13 +701,13 @@ class TextSpec extends SparkSpec {
     // 2. per-turn counts sum to the full rendering's token count
     //    (segment additivity — every boundary is whitespace)
     val counted = graft.operators.Bpe.turnTokenCounts(df, "units",
-      SparkEntry.CommittedBpeMerges)
+      graft.battery.CorpusQueries.CommittedBpeMerges)
     val counts = counted.selectExpr(
         "transform(turn_counts, c -> array(c.header_tokens, c.body_tokens))")
       .as[Seq[Seq[Long]]].head().map(a => (a(0), a(1)))
     val fullIds = graft.operators.Bpe.tokenIds(
         df.select($"doc_id", $"rendered"), "doc_id", "rendered",
-        SparkEntry.CommittedBpeMerges)
+        graft.battery.CorpusQueries.CommittedBpeMerges)
       .select("token_ids").as[Seq[Long]].head()
     assert(counts.map(c => c._1 + c._2).sum == fullIds.size,
       s"$counts vs ${fullIds.size}")
@@ -720,7 +720,7 @@ class TextSpec extends SparkSpec {
     def nTok(s: String): Long = {
       val d = Seq((1L, s)).toDF("id", "t")
       graft.operators.Bpe.tokenIds(d, "id", "t",
-        SparkEntry.CommittedBpeMerges).select("n_tokens").as[Long].head()
+        graft.battery.CorpusQueries.CommittedBpeMerges).select("n_tokens").as[Long].head()
     }
     val render = df.head().getString(1)
     // turn 2 (first assistant): [after its header, end of its body)
@@ -745,7 +745,7 @@ class TextSpec extends SparkSpec {
       val d0 = Seq(Tuple1(1L)).toDF("doc_id")
         .select(Text.chatTurnUnits(m).as("units"))
       graft.operators.Bpe.turnTokenCounts(d0, "units",
-          SparkEntry.CommittedBpeMerges)
+          graft.battery.CorpusQueries.CommittedBpeMerges)
         .select(Text.turnMaskSpans($"units", $"turn_counts").as("sp"))
         .selectExpr("transform(sp, z -> array(z.start, z.end))")
         .as[Seq[Seq[Long]]].head().map(a => (a(0), a(1)))

@@ -73,7 +73,7 @@ class BpeSpec extends SparkSpec {
     // repeated self-adjacent pairs, merge-created adjacency that must
     // NOT re-pair (merged symbols are atomic), multiple merges in one
     // word, and the end-of-word merge.
-    val merges = graft.SparkEntry.CommittedBpeMerges
+    val merges = graft.battery.CorpusQueries.CommittedBpeMerges
     val rank = merges.zipWithIndex.map { case (p, i) => p -> i }.toMap
     def occ(w: String, p: String): Int = (w.length - w.replace(p, "").length) / 2
     def closedForm(w: String): Int =
@@ -95,7 +95,7 @@ class BpeSpec extends SparkSpec {
     // merge. Holds because 'th' and 'in' are character-disjoint
     // (occurrences can never overlap, so merge order is immaterial)
     // and non-chaining (merged symbols never re-pair).
-    val merges = graft.SparkEntry.CommittedBpeMerges
+    val merges = graft.battery.CorpusQueries.CommittedBpeMerges
     val rank = merges.zipWithIndex.map { case (p, i) => p -> i }.toMap
     def regexScan(w: String): Vector[String] = {
       val re = "th|in|.".r.findAllIn(w).toVector
@@ -111,7 +111,7 @@ class BpeSpec extends SparkSpec {
   }
 
   test("tokenId scheme: reserved sep, </w>, merge ranks, codepoint base; tokenIds composes") {
-    val merges = graft.SparkEntry.CommittedBpeMerges
+    val merges = graft.battery.CorpusQueries.CommittedBpeMerges
     assert(Bpe.SepId == 0L)
     assert(Bpe.tokenId("</w>", merges) == 1L)
     assert(Bpe.tokenId("th", merges) == 2L)
@@ -137,7 +137,7 @@ class BpeSpec extends SparkSpec {
   }
 
   test("chained merges: stage structure live, rank priority observable, q82c scan equivalence") {
-    val chained = graft.SparkEntry.CommittedChainedBpeMerges
+    val chained = graft.battery.CorpusQueries.CommittedChainedBpeMerges
     val rank = chained.zipWithIndex.toMap
     def toks(w: String) = Bpe.tokenizeWord(w, rank)
     // chaining is LIVE: rank 1 consumes rank 0's output
@@ -180,8 +180,8 @@ class BpeSpec extends SparkSpec {
     ).zipWithIndex.map { case (t, i) => (i.toLong, t) }
     val docs = texts.toDF("doc_id", "text")
     val learned = Bpe.trainMerges(docs, "text", numMerges = 12)
-    for (merges <- Seq(graft.SparkEntry.CommittedBpeMerges,
-        graft.SparkEntry.CommittedChainedBpeMerges, learned)) {
+    for (merges <- Seq(graft.battery.CorpusQueries.CommittedBpeMerges,
+        graft.battery.CorpusQueries.CommittedChainedBpeMerges, learned)) {
       val toks = Bpe.tokenIds(docs, "doc_id", "text", merges)
       val got = Bpe.decodeTokenIds(toks, "doc_id", "token_ids", merges)
         .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
@@ -196,7 +196,7 @@ class BpeSpec extends SparkSpec {
     val weird = Seq((1L, Array(5L + 'h'.toLong, 1L, Long.MaxValue - 3)))
       .toDF("doc_id", "token_ids")
     val d = Bpe.decodeTokenIds(weird, "doc_id", "token_ids",
-      graft.SparkEntry.CommittedBpeMerges)
+      graft.battery.CorpusQueries.CommittedBpeMerges)
       .head().getString(1)
     assert(d == "h �", s"got '$d'")
   }

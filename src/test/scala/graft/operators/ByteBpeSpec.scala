@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 class ByteBpeSpec extends SparkSpec {
   import spark.implicits._
 
-  private val M = graft.SparkEntry.CommittedByteBpeMerges
+  private val M = graft.battery.CorpusQueries.CommittedByteBpeMerges
   private def rank = M.zipWithIndex.toMap
 
   test("pretokenize: every GPT-2 regex branch, losslessly partitioning the text") {

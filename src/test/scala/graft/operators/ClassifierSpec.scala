@@ -78,13 +78,13 @@ class ClassifierSpec extends SparkSpec {
     // jobs). The exact-decimal gradient argument says grouping cannot
     // change a single bit — this pins it by running the SAME set
     // through both paths (localTrainMax = 0 forces the Spark loop).
-    val train = graft.SparkEntry.GateTrainingSet.toDF("text", "label")
+    val train = graft.battery.CorpusQueries.GateTrainingSet.toDF("text", "label")
     val (wl, bl) = Classifier.trainLogistic(train, "text", "label",
-      dim = graft.SparkEntry.GateDim, iters = graft.SparkEntry.GateIters,
-      lr = graft.SparkEntry.GateLr)
+      dim = graft.battery.CorpusQueries.GateDim, iters = graft.battery.CorpusQueries.GateIters,
+      lr = graft.battery.CorpusQueries.GateLr)
     val (wd, bd) = Classifier.trainLogistic(train, "text", "label",
-      dim = graft.SparkEntry.GateDim, iters = graft.SparkEntry.GateIters,
-      lr = graft.SparkEntry.GateLr, localTrainMax = 0L)
+      dim = graft.battery.CorpusQueries.GateDim, iters = graft.battery.CorpusQueries.GateIters,
+      lr = graft.battery.CorpusQueries.GateLr, localTrainMax = 0L)
     assert(bl == bd, s"bias diverged: local $bl vs distributed $bd")
     assert(wl.toSeq == wd.toSeq,
       "weights diverged between the local and distributed paths: " +
@@ -94,20 +94,20 @@ class ClassifierSpec extends SparkSpec {
   }
 
   test("q87b gate training reproduces the committed milli-weight snapshot") {
-    // the q87b oracle scores under SparkEntry.CommittedGateWeightsMilli
+    // the q87b oracle scores under graft.battery.CorpusQueries.CommittedGateWeightsMilli
     // while the battery entry trains fresh — this pin is what makes
     // that agreement a theorem instead of a coincidence. Any trainer
     // change that shifts a single milli-unit fails here first.
-    val train = graft.SparkEntry.GateTrainingSet.toDF("text", "label")
+    val train = graft.battery.CorpusQueries.GateTrainingSet.toDF("text", "label")
     val (w, b) = Classifier.trainLogistic(train, "text", "label",
-      dim = graft.SparkEntry.GateDim, iters = graft.SparkEntry.GateIters,
-      lr = graft.SparkEntry.GateLr)
+      dim = graft.battery.CorpusQueries.GateDim, iters = graft.battery.CorpusQueries.GateIters,
+      lr = graft.battery.CorpusQueries.GateLr)
     val (wm, bm) = Classifier.quantizeMilli(w, b)
-    assert(bm == graft.SparkEntry.CommittedGateBiasMilli,
-      s"bias drifted: $bm vs committed ${graft.SparkEntry.CommittedGateBiasMilli}")
-    assert(wm.toSeq == graft.SparkEntry.CommittedGateWeightsMilli.toSeq,
+    assert(bm == graft.battery.CorpusQueries.CommittedGateBiasMilli,
+      s"bias drifted: $bm vs committed ${graft.battery.CorpusQueries.CommittedGateBiasMilli}")
+    assert(wm.toSeq == graft.battery.CorpusQueries.CommittedGateWeightsMilli.toSeq,
       "trained weights drifted from the committed snapshot: " +
-        wm.zip(graft.SparkEntry.CommittedGateWeightsMilli)
+        wm.zip(graft.battery.CorpusQueries.CommittedGateWeightsMilli)
           .zipWithIndex.filter { case ((a, c), _) => a != c }
           .take(8).map { case ((a, c), j) => s"j=$j got=$a want=$c" }
           .mkString(", "))
@@ -132,11 +132,11 @@ class ClassifierSpec extends SparkSpec {
     // of raw document text can be driver-killing gigabytes. Zero byte
     // budget pushes even the tiny gate set down the distributed loop;
     // exact-decimal gradients keep the two paths bit-identical.
-    val train = graft.SparkEntry.GateTrainingSet.toDF("text", "label")
+    val train = graft.battery.CorpusQueries.GateTrainingSet.toDF("text", "label")
     val (wl, bl) = Classifier.trainLogistic(train, "text", "label",
-      dim = graft.SparkEntry.GateDim, iters = 3, lr = graft.SparkEntry.GateLr)
+      dim = graft.battery.CorpusQueries.GateDim, iters = 3, lr = graft.battery.CorpusQueries.GateLr)
     val (wd, bd) = Classifier.trainLogistic(train, "text", "label",
-      dim = graft.SparkEntry.GateDim, iters = 3, lr = graft.SparkEntry.GateLr,
+      dim = graft.battery.CorpusQueries.GateDim, iters = 3, lr = graft.battery.CorpusQueries.GateLr,
       localTrainMaxBytes = 0L)
     assert(bl == bd, s"bias diverged under the byte-bound fallback: $bl vs $bd")
     assert(wl.toSeq == wd.toSeq,

@@ -450,7 +450,7 @@ class SimilaritySpec extends SparkSpec {
     Seq("0.001", "0.01", "0.1").foreach { sf =>
       val e = spark.read.parquet(s"/root/testdata/sf$sf/embeddings.parquet")
         .select("vec_id", "embedding")
-      val clones = graft.SparkEntry.annClones(e)
+      val clones = graft.battery.DedupQueries.annClones(e)
       val q = e.filter($"vec_id" < 5)
         .select($"vec_id".as("query_id"), $"embedding".as("qv"))
       def scored(corpus: org.apache.spark.sql.DataFrame) = corpus
